@@ -237,35 +237,6 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC").flatMap(s =>
         scala.util.Try(s.toDouble).toOption).getOrElse(900.0)
 
-    // Self-adjudication: when the dispersion gate fails at budget
-    // exhaustion, [[Adjudicate.run]] re-pairs this head against the
-    // previous round's snapshotted HEAD (A,B,A,B fresh JVMs on this
-    // same host session) and emits ADJUDICATION_R{N}.json — the
-    // 4cb35fa protocol that twice had to be run by hand.
-    //
-    // LAZY since round 13: the r12 run carved a 480 s reserve out of
-    // the 900 s budget UNCONDITIONALLY whenever a prev-head jar
-    // existed, which cut its timed rounds 7 → 3 and drove the very
-    // 13.96% spread the reserve exists to adjudicate. Now the timed
-    // rounds get the FULL budget and the adjudication runs as
-    // OVERTIME, spent only on an actual gate failure — the converged
-    // common case pays nothing. The headline line is printed (and
-    // flushed) BEFORE the overtime starts, so an external step timeout
-    // killing the adjudication can cost at most the ADJUDICATION
-    // artifact, never the bench line or BENCH_FULL.json.
-    //
-    // Enabled only for the full-suite driver shape (a subset run is
-    // already a manual probe) with a prev-head jar present, and only
-    // when the caller's budget is at least the reserve: a small
-    // SPARK_GRAFT_BENCH_BUDGET_SEC signals a bounded quick probe, and
-    // overtime larger than the whole requested budget would not honor
-    // it even approximately.
-    val adjReserveSec = sys.env.get("SPARK_GRAFT_ADJ_RESERVE_SEC")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(480.0)
-    val adjEnabled = sys.env.get("SPARK_GRAFT_NO_ADJUDICATE").isEmpty &&
-      subset.isEmpty && budgetSec >= adjReserveSec && Adjudicate.prevJar().isDefined
-    val mainBudgetSec = budgetSec
-
     // Phase 2 — untimed whole-suite passes at the measured scale:
     // sf0.001 covers JIT, but data-dependent state (page cache for
     // these exact files, AQE statistics, broadcast builds, thread-pool
@@ -307,12 +278,12 @@ object Bench {
       println(coldLine)
       System.out.flush()
     }
-    if (mainBudgetSec >= 300 && warmPassSec <= mainBudgetSec / 3.0)
+    if (budgetSec >= 300 && warmPassSec <= budgetSec / 3.0)
       order.foreach(runOnce)
-    else if (mainBudgetSec >= 300)
+    else if (budgetSec >= 300)
       System.err.println(
         f"[bench] first warm-up pass took $warmPassSec%.1f s > budget/3 " +
-          f"(${mainBudgetSec / 3.0}%.0f s): skipping the second pass to " +
+          f"(${budgetSec / 3.0}%.0f s): skipping the second pass to " +
           "protect the timed budget (degraded-host mode)")
 
     def roundBoundary(): Unit = {
@@ -336,8 +307,8 @@ object Bench {
     // round-over-round totals are only comparable when every round's
     // min/steady statistics draw from similar sample depth, and a
     // 3-round minimum produced min-composites assembled from a third
-    // of the samples of a 7-round run. Small budgets (scale probes,
-    // adjudication children at 60 s) keep the 3-round floor.
+    // of the samples of a 7-round run. Small budgets (scale probes)
+    // keep the 3-round floor.
     // SPARK_GRAFT_BENCH_MIN_ROUNDS lowers the absolute round floor
     // (never raises it, min 1): at decade scale a single timed round
     // can cost 1500+ s, and a fixed 3-round floor prices a 3-fresh-JVM
@@ -354,7 +325,7 @@ object Bench {
     val floorRounds = sys.env.get("SPARK_GRAFT_BENCH_MIN_ROUNDS")
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .map(_.max(1).min(3)).getOrElse(3)
-    val minRounds = if (mainBudgetSec >= 720) 6 else floorRounds
+    val minRounds = if (budgetSec >= 720) 6 else floorRounds
     val hardCapRounds = 20
     // 10%, recalibrated r14 from the MEASURED same-host floor — the
     // original 5% sat BELOW this host's demonstrated noise and failed
@@ -367,8 +338,7 @@ object Bench {
     // window converts every headline into "read the adjudication
     // instead"; 10% sits above the observed 6.5-9% spread floor and
     // still well below any delta the per-round verdicts have treated
-    // as real (code regressions adjudicated at 1.06-1.3x). Overtime
-    // adjudication still backstops genuine failures past it.
+    // as real (code regressions adjudicated at 1.06-1.3x).
     val maxSpreadPct = 10.0
     // The dispersion gate's window is FIXED at 3 regardless of the
     // round minimum: spread_pct is defined (and labeled, here and in
@@ -410,7 +380,7 @@ object Bench {
     def nextRoundFits(): Boolean = {
       val pool = { val c = completeRounds; if (c.nonEmpty) c else rounds }
       val perRound = pool.map(_.values.sum).sorted.apply(pool.size / 2)
-      timedSec + perRound <= mainBudgetSec
+      timedSec + perRound <= budgetSec
     }
     def wantMore(): Boolean = {
       // Round 1 is unconditional (no headline exists without at least
@@ -476,7 +446,7 @@ object Bench {
       System.err.println(
         f"[bench] round $r total ${times.values.sum}%.3f s" +
           (if (times.size < order.size) s" (${order.size - times.size} FAILED)" else "") +
-          f", timed ${timedSec}%.1f/${mainBudgetSec}%.0f s" +
+          f", timed ${timedSec}%.1f/${budgetSec}%.0f s" +
           (if (r >= minRounds) {
             val sp = bestSpreadPct()
             if (sp < 0) ", best-3 spread n/a (no complete rounds)"
@@ -508,20 +478,9 @@ object Bench {
       java.nio.file.Paths.get(outPath),
       (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case NonFatal(_) => () }
-    val needAdjudication = adjEnabled && !converged()
-    // Children must alternate on an idle slate: stop the parent
-    // session (its 32-thread pool and heap would be measurement noise)
-    // BEFORE spawning them. The headline line prints (and flushes)
-    // BEFORE the overtime adjudication: Adjudicate writes only to
-    // stderr and child logs, so the line stays the last stdout content
-    // for the tail-parsing harness, and a kill mid-adjudication can no
-    // longer lose it.
     spark.stop()
     println(line)
     System.out.flush()
-    if (needAdjudication)
-      Adjudicate.run(sfDir, reserveSec = adjReserveSec,
-        reason = f"bench dispersion gate failed: best-3 spread $spread%.2f%% > $maxSpreadPct%.0f%% at budget exhaustion (${rounds.size} rounds); adjudication run as overtime past the timed budget")
   }
 
   /** (printed stdout line, BENCH_FULL.json content).

@@ -339,39 +339,20 @@ object Cli {
 
   /** Fill NULL start_date/end_date in extraction metadata from the
     * fact table's actual per-run date range — reference
-    * backfill_extraction_dates.py:47-103. Atomic-swap republish, same
-    * protocol as recordMetadata. */
+    * backfill_extraction_dates.py:47-103. Republished through
+    * [[Warehouse.publishAtomic]], like recordMetadata: a prior run that
+    * died between the swap renames is recovered before the read. */
   private def backfill(spark: SparkSession, warehouse: String, source: String): Int = {
     if (!Schemas.schemas.contains(source)) {
       System.err.println(s"unknown data source: $source")
       return 1
     }
     val metaPath = s"${warehouse.stripSuffix("/")}/extraction_metadata"
-    // same crash recovery as recordMetadata: a prior run that died
-    // between the two swap renames leaves the only copy at .old
-    val fs0 = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val (t0, o0) = (new org.apache.hadoop.fs.Path(metaPath),
-      new org.apache.hadoop.fs.Path(metaPath + ".old"))
-    if (!fs0.exists(t0) && fs0.exists(o0) && !fs0.rename(o0, t0)) {
-      System.err.println(s"backfill: cannot restore $o0"); return 1
+    Warehouse.publishAtomic(spark, metaPath) { tmp =>
+      val meta = spark.read.parquet(metaPath)
+      val fact = spark.read.parquet(Warehouse.tablePath(warehouse, source))
+      graft.incr.Backfill.backfillDates(meta, fact).write.mode("overwrite").parquet(tmp)
     }
-    val meta = spark.read.parquet(metaPath)
-    val fact = spark.read.parquet(Warehouse.tablePath(warehouse, source))
-    val filled = graft.incr.Backfill.backfillDates(meta, fact)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val (tmpP, oldP, tgtP) = (
-      new org.apache.hadoop.fs.Path(metaPath + ".new"),
-      new org.apache.hadoop.fs.Path(metaPath + ".old"),
-      new org.apache.hadoop.fs.Path(metaPath))
-    filled.write.mode("overwrite").parquet(metaPath + ".new")
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    if (!fs.rename(tgtP, oldP)) {
-      System.err.println(s"backfill: cannot retire $tgtP"); return 1
-    }
-    if (!fs.rename(tmpP, tgtP)) {
-      System.err.println(s"backfill: cannot publish $tmpP"); return 1
-    }
-    fs.delete(oldP, true)
     val published = spark.read.parquet(metaPath)
     val remaining = published.filter(col("start_date").isNull).count()
     println(s"backfill $source: ${published.count()} metadata rows, $remaining still missing dates")

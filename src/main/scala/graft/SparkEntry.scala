@@ -1675,8 +1675,10 @@ object SparkEntry {
     // The production ANN pattern end-to-end: quantized scoring
     // proposes CandK candidates per query, exact cosine re-ranks to
     // the final 10 — the exact kernel touches |q|xCandK rows, not the
-    // corpus. CandK=200 is the measured sweet spot (AnnKnobBench:
-    // recall indistinguishable from exact at the same wall as 50).
+    // corpus. CandK=200 is the measured sweet spot (ARCHITECTURE.md
+    // "The knobs, measured", raw in MEASUREMENTS_R11.json
+    // ann_knobs_sf1: recall indistinguishable from exact at the same
+    // wall as 50).
     "v9_quantized_rerank" -> ((s, dir) => {
       val e = tbl(s, dir, "embeddings")
       val q = e.filter(col("vec_id") % 100 === 0)

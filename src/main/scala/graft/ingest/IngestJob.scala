@@ -6,6 +6,7 @@ import graft.dedup.Dedup
 import graft.schema.Schemas
 import graft.sink.IdempotentAppend
 import graft.validate.{Rules, Validator}
+import graft.warehouse.Warehouse
 
 /** The composed `load-data <source> <file>` pipeline — the reference's
   * main entry point (reference src/database_management.py:105-181 →
@@ -190,10 +191,12 @@ object IngestJob {
     * `config_snapshot` (run parameters) and `source_urls` (inputs)
     * are carried as JSON strings via `to_json(struct/map/array)`.
     *
-    * The published table is swapped atomically (same rename-to-.old
-    * protocol as [[graft.views.Refresh.refreshView]]): a crash between
-    * steps always leaves a readable table at the published path — never
-    * the delete-then-rename window where no table exists. */
+    * The published table is swapped through
+    * [[graft.warehouse.Warehouse.publishAtomic]]: a crash between steps
+    * always leaves a recoverable copy — never the delete-then-rename
+    * window where no table exists — and the read-and-merge below runs
+    * after that copy is restored, so the history never collapses to
+    * this run's single row. */
   def recordMetadata(
       spark: SparkSession,
       metadataPath: String,
@@ -217,34 +220,15 @@ object IngestJob {
         typedlit(result.report.sampleErrors).as("sample_errors"))))
       .withColumn("config_snapshot", to_json(typedlit(configSnapshot)))
       .withColumn("source_urls", to_json(typedlit(sourceUrls)))
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val tmp = metadataPath + ".new"
-    val old = metadataPath + ".old"
-    val (tmpP, oldP, tgtP) = (
-      new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(old),
-      new org.apache.hadoop.fs.Path(metadataPath))
-    // Crash recovery BEFORE reading: a prior run that died between the
-    // two renames leaves the only copy at .old — restore it, never
-    // delete it, or the whole metadata history silently collapses to
-    // this run's single row.
-    if (!fs.exists(tgtP) && fs.exists(oldP) && !fs.rename(oldP, tgtP)) {
-      throw new java.io.IOException(s"recordMetadata: cannot restore $oldP -> $tgtP")
+    Warehouse.publishAtomic(spark, metadataPath) { tmp =>
+      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      val merged =
+        if (fs.exists(new org.apache.hadoop.fs.Path(metadataPath))) {
+          IdempotentAppend.mergeLatest(
+            spark.read.parquet(metadataPath), row,
+            Seq("extraction_run_id"), Seq(col("extraction_timestamp_ms").desc))
+        } else row
+      merged.write.mode("overwrite").parquet(tmp)
     }
-    val merged =
-      if (fs.exists(tgtP)) {
-        IdempotentAppend.mergeLatest(
-          spark.read.parquet(metadataPath), row,
-          Seq("extraction_run_id"), Seq(col("extraction_timestamp_ms").desc))
-      } else row
-    merged.write.mode("overwrite").parquet(tmp)
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    if (fs.exists(tgtP) && !fs.rename(tgtP, oldP)) {
-      throw new java.io.IOException(s"recordMetadata: cannot retire $tgtP")
-    }
-    if (!fs.rename(tmpP, tgtP)) {
-      throw new java.io.IOException(s"recordMetadata: cannot publish $tmpP -> $tgtP")
-    }
-    if (fs.exists(oldP)) fs.delete(oldP, true)
   }
 }

@@ -1045,7 +1045,8 @@ object Similarity {
     * `probeHamming` over `nBits` bits, identity mask first.
     * 1 + nBits + C(nBits,2) masks at the default hamming 2,
     * + C(nBits,3) at hamming 3 — the top of the measured recall dial
-    * (AnnKnobBench: 0.04 / 0.22 / 0.49 per radius step at sf1); the
+    * (0.04 / 0.22 / 0.49 per radius step at sf1: ARCHITECTURE.md "The
+    * knobs, measured", raw in MEASUREMENTS_R11.json ann_knobs_sf1); the
     * cap at 3 keeps probe volume O(b³), still polylog under the
     * adaptive-bits rule. */
   def multiProbeMasks(nBits: Int, probeHamming: Int): Seq[Int] = {

@@ -49,14 +49,6 @@ import graft.dedup.Dedup
   */
 object IdempotentAppend {
 
-  /** Default for the `lock` parameters below: true unless the JVM was
-    * started with `-Dgraft.append.lock=false`. The property exists for
-    * ONE purpose — the bench lease-cost isolation run (same queries,
-    * lease on vs off, same session conditions); production callers
-    * never set it, so the writer-lease guarantee stays the default. */
-  private[graft] def lockDefault: Boolean =
-    !"false".equals(System.getProperty("graft.append.lock"))
-
   final case class UpsertResult(incoming: Long, inserted: Long, duplicates: Long)
 
   /** Null-safe equi-join condition over natural-key columns, written
@@ -127,12 +119,9 @@ object IdempotentAppend {
     * is given — a 100 TB table contributes only its overlapping
     * partitions to the join), then atomic append.
     *
-    * `lock = true` (the default) holds the table's writer lease across
-    * the read→publish critical section — the writer-vs-writer
-    * guarantee in the object doc. `lock = false` opts out for callers
-    * that already serialize externally (and for the spec that
-    * demonstrates WHY the lease exists). The lease is released in a
-    * `finally`: unlike maintenance, a failed append never leaves the
+    * The table's writer lease is held across the read→publish
+    * critical section — the writer-vs-writer guarantee in the object
+    * doc. The lease is released in a `finally`: unlike maintenance, a failed append never leaves the
     * table in a state the idempotent re-run cannot repair, so holding
     * the lock after failure would only block recovery. */
   def appendNew(
@@ -143,7 +132,6 @@ object IdempotentAppend {
       nullSafeCols: Set[String] = Set.empty,
       timeCol: Option[String] = Some("timestamp_ms"),
       incomingCount: Option[Long] = None,
-      lock: Boolean = lockDefault,
   ): UpsertResult = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val target = new Path(tablePath)
@@ -178,9 +166,7 @@ object IdempotentAppend {
     // an upper bound — so 0 here means genuinely empty.)
     if (incoming == 0L) return UpsertResult(0L, 0L, 0L)
 
-    val lease =
-    if (lock) Some(graft.warehouse.MaintenanceLock.acquireAppend(fs, tablePath))
-    else None
+    val lease = graft.warehouse.MaintenanceLock.acquireAppend(fs, tablePath)
     try {
     val toInsert =
     if (!fs.exists(target)) cached
@@ -205,9 +191,9 @@ object IdempotentAppend {
         incomingRowBound = Some(incoming))
     }
 
-    val insertedCount = atomicAppend(spark, toInsert, tablePath, lease)
+    val insertedCount = atomicAppend(spark, toInsert, tablePath, Some(lease))
     UpsertResult(incoming, insertedCount, incoming - insertedCount)
-    } finally lease.foreach(graft.warehouse.MaintenanceLock.release(fs, tablePath, _))
+    } finally graft.warehouse.MaintenanceLock.release(fs, tablePath, lease)
     // finally, not a tail call: a lock-refused (or failed) append must
     // not leak the batch's InMemoryRelation for the session lifetime
     } finally if (owned) cached.unpersist()
@@ -224,11 +210,10 @@ object IdempotentAppend {
     orderCols: Seq[String],
     nullSafeCols: Set[String] = Set.empty,
     timeCol: Option[String] = Some("timestamp_ms"),
-    lock: Boolean = lockDefault,
   ): UpsertResult = {
     val batch = Dedup.firstWinsByName(incoming, keys, orderCols)
     appendNew(spark, batch, tablePath, keys, nullSafeCols, timeCol,
-    incomingCount = Some(incoming.count()), lock = lock)
+    incomingCount = Some(incoming.count()))
   }
 
   /** Stage-then-rename append; returns appended row count.

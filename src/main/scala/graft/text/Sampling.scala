@@ -451,8 +451,10 @@ object Sampling {
     * (score desc, key) is contained in the union of the per-salt
     * top-caps (any globally-kept row is in its own bucket's top-cap),
     * and level 2 applies the SAME total order — SamplingSpec pins
-    * bucketed ≡ plain row-for-row; CapSkewBench commits the measured
-    * hot-domain point. */
+    * bucketed ≡ plain row-for-row; MEASUREMENTS_R12.json
+    * domain_cap_skew records the measured hot-domain point (40M rows,
+    * one domain owning 12M, cap 100000: plain 33.89 s vs bucketed
+    * 9.22 s, outputs identical). */
   def capPerStratumBucketed(
       docs: DataFrame,
       stratumCol: Column,

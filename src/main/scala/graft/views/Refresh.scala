@@ -1,7 +1,7 @@
 package graft.views
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.warehouse.Warehouse
 
 /** Materialized-view lifecycle (reference operators M1–M3).
   *
@@ -43,57 +43,39 @@ object Refresh {
   def viewPath(warehouse: String, name: String): String =
     s"${warehouse.stripSuffix("/")}/$name"
 
-  /** M2: recompute one view and swap it into place. The two renames
+  /** M2: recompute one view and swap it into place through
+    * [[graft.warehouse.Warehouse.publishAtomic]]. The two renames
     * leave a sub-millisecond window where the published path is absent
     * (a plain filesystem has no true atomic directory swap); a reader
     * racing exactly into it should retry — and a crash inside it
-    * leaves the previous view at `.old`, which the next refresh (or
-    * this preamble) restores before rebuilding. */
-  def refreshView(spark: SparkSession, warehouse: String, job: ViewJob): Long = {
-    val target = viewPath(warehouse, job.name)
-    val tmp = target + ".new"
-    val old = target + ".old"
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val (tgtP, tmpP, oldP) = (new Path(target), new Path(tmp), new Path(old))
-    // crash recovery: republish the retired copy so readers see the
-    // stale view (not nothing) while this refresh rebuilds
-    if (!fs.exists(tgtP) && fs.exists(oldP) && !fs.rename(oldP, tgtP)) {
-      throw new java.io.IOException(s"refreshView: cannot restore $oldP -> $tgtP")
+    * leaves the previous view at `.old`, which the next refresh
+    * republishes (readers see the stale view, not nothing) before
+    * rebuilding. */
+  def refreshView(spark: SparkSession, warehouse: String, job: ViewJob): Long =
+    Warehouse.publishAtomic(spark, viewPath(warehouse, job.name)) { tmp =>
+      val built = job.build(spark)
+      // A partitioned view MUST cluster on its partition columns before
+      // the write: dynamic partitioning from unclustered input makes
+      // every write task emit a file into every value's directory —
+      // measured at the sf10 IVF index build: 32 tasks × 2048 cells =
+      // 92k files for ONE table (and an object store at 100 TB punishes
+      // small files harder than a local disk does). One hash shuffle on
+      // the partition columns makes it one file per value — the
+      // standard cluster-by-partition-col write pattern.
+      val df =
+        if (job.partitionBy.isEmpty) built
+        else built.repartition(job.partitionBy.map(org.apache.spark.sql.functions.col): _*)
+      // the published row count rides the write as an observed metric —
+      // the old read-the-staging-dir-back count() doubled every
+      // refresh's driver actions for a number the write already knows
+      val obs = new org.apache.spark.sql.Observation()
+      val writer = df.observe(obs, org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite)
+      (if (job.partitionBy.nonEmpty) writer.partitionBy(job.partitionBy: _*) else writer)
+        .parquet(tmp)
+      obs.get("n").asInstanceOf[Long]
     }
-    val built = job.build(spark)
-    // A partitioned view MUST cluster on its partition columns before
-    // the write: dynamic partitioning from unclustered input makes
-    // every write task emit a file into every value's directory —
-    // measured at the sf10 IVF index build: 32 tasks × 2048 cells =
-    // 92k files for ONE table (and an object store at 100 TB punishes
-    // small files harder than a local disk does). One hash shuffle on
-    // the partition columns makes it one file per value — the
-    // standard cluster-by-partition-col write pattern.
-    val df =
-      if (job.partitionBy.isEmpty) built
-      else built.repartition(job.partitionBy.map(org.apache.spark.sql.functions.col): _*)
-    // the published row count rides the write as an observed metric —
-    // the old read-the-staging-dir-back count() doubled every
-    // refresh's driver actions for a number the write already knows
-    val obs = new org.apache.spark.sql.Observation()
-    val writer = df.observe(obs, org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-    (if (job.partitionBy.nonEmpty) writer.partitionBy(job.partitionBy: _*) else writer)
-      .parquet(tmp)
-    val n = obs.get("n").asInstanceOf[Long]
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    // Hadoop rename reports most failures by returning false — an
-    // unchecked rename here silently publishes nothing.
-    if (fs.exists(tgtP) && !fs.rename(tgtP, oldP)) {
-      throw new java.io.IOException(s"refreshView: cannot retire $tgtP")
-    }
-    if (!fs.rename(tmpP, tgtP)) {
-      throw new java.io.IOException(s"refreshView: cannot publish $tmpP -> $tgtP")
-    }
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    n
-  }
 
   /** Refresh every view registered for the given sources; returns
     * view→rowcount. Sources with no views (reference: EIA/OE read raw)

@@ -122,29 +122,37 @@ object Warehouse {
     }
   }
 
-  /** Crash-safe republish of a rewritten table: write `.new`, retire
-    * the live copy to `.old`, promote, drop `.old`. A reader never
-    * sees a HALF-written table (each copy is complete before any
-    * rename), and a crash between the renames leaves the only copy at
-    * `.old` (recoverable — same protocol as IngestJob's metadata
-    * swap). NOT reader-atomic: two sequential renames leave a window
-    * where the live path does not exist, so a concurrent reader can
-    * fail with path-not-found and must retry (retryWithBackoff is the
-    * house tool); true atomicity needs a catalog/manifest layer
-    * (Delta/Iceberg territory), out of scope for plain parquet dirs.
-    * The input `df` may READ from `path`: it is fully materialized
-    * into `.new` before the live copy moves. */
-  def publishAtomic(spark: SparkSession, path: String, df: DataFrame): Unit = {
+  /** The one crash-safe republish protocol (views, extraction
+    * metadata, table rewrites): restore `.old` if a crash left it as
+    * the only copy, let `write` fill `<path>.new`, retire the live copy
+    * to `.old`, promote `.new`, drop `.old`. A reader never sees a
+    * HALF-written table (each copy is complete before any rename), and
+    * a crash between the renames leaves the only copy at `.old`, which
+    * the next call's preamble republishes BEFORE `write` runs — so a
+    * `write` that reads and merges the published table sees the full
+    * history, never an empty path. NOT reader-atomic: two sequential
+    * renames leave a window where the live path does not exist, so a
+    * concurrent reader can fail with path-not-found and must retry
+    * (retryWithBackoff is the house tool); true atomicity needs a
+    * catalog/manifest layer (Delta/Iceberg territory), out of scope
+    * for plain parquet dirs. `write` may READ from `path`: it is fully
+    * materialized into `.new` before the live copy moves. Hadoop
+    * rename reports most failures by returning false, so every rename
+    * is checked — an unchecked one silently publishes nothing. */
+  def publishAtomic[A](spark: SparkSession, path: String)(write: String => A): A = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val (tmpP, oldP, tgtP) =
-      (new Path(path + ".new"), new Path(path + ".old"), new Path(path))
-    df.write.mode("overwrite").parquet(path + ".new")
+    val tmp = path + ".new"
+    val (tmpP, oldP, tgtP) = (new Path(tmp), new Path(path + ".old"), new Path(path))
+    if (!fs.exists(tgtP) && fs.exists(oldP) && !fs.rename(oldP, tgtP))
+      throw new java.io.IOException(s"publishAtomic: cannot restore $oldP -> $tgtP")
+    val out = write(tmp)
     if (fs.exists(oldP)) fs.delete(oldP, true)
     if (fs.exists(tgtP) && !fs.rename(tgtP, oldP))
       throw new java.io.IOException(s"publishAtomic: cannot retire $tgtP")
     if (!fs.rename(tmpP, tgtP))
-      throw new java.io.IOException(s"publishAtomic: cannot publish $tmpP")
-    fs.delete(oldP, true)
+      throw new java.io.IOException(s"publishAtomic: cannot publish $tmpP -> $tgtP")
+    if (fs.exists(oldP)) fs.delete(oldP, true)
+    out
   }
 
   /** Outcome of a schema evolution: row count preserved, columns added
@@ -205,7 +213,7 @@ object Warehouse {
           if (freshHave.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
           else lit(null).cast(f.dataType).as(f.name)
         }.toIndexedSeq: _*)
-        publishAtomic(spark, path, evolved)
+        publishAtomic(spark, path)(evolved.write.mode("overwrite").parquet(_))
       }
     }
     SchemaUpdate(spark.read.parquet(path).count(), added, retyped, dropped)
@@ -249,7 +257,7 @@ object Warehouse {
     // (appends check the lock and fail fast instead).
     MaintenanceLock.withLock(fs, path, "compact") {
       val df = spark.read.option("mergeSchema", "true").parquet(path)
-      publishAtomic(spark, path, df.repartition(want))
+      publishAtomic(spark, path)(df.repartition(want).write.mode("overwrite").parquet(_))
     }
     val after = fs.listStatus(new Path(path))
       .count(s => s.isFile && s.getPath.getName.startsWith("part-"))

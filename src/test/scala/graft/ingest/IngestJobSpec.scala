@@ -124,24 +124,82 @@ class IngestJobSpec extends SparkSpec {
     assert(parsed == Seq(f))
   }
 
-  test("recordMetadata restores the .old backup left by a crash between renames") {
-    val table = freshTable()
-    val meta = freshTable() + "_meta"
-    val f = write(npp(1767196019683L, "K 1", 1.0))
-    val r = IngestJob.load(spark, "npp", f, table, runId, now)
-    IngestJob.recordMetadata(spark, meta, r, now)
-    // simulate a run that died between retiring the table and
-    // publishing the new one: only .old remains
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(meta),
-      new org.apache.hadoop.fs.Path(meta + ".old")))
-    val r2 = r.copy(runId = "650e8400-e29b-41d4-a716-446655440000")
-    IngestJob.recordMetadata(spark, meta, r2, now + 1)
-    val m = spark.read.parquet(meta)
-    // both the recovered history row and the new run survive
-    assert(m.count() == 2)
-    assert(m.select("extraction_run_id").collect().map(_.getString(0)).toSet ==
-      Set(runId, r2.runId))
+  /** One caller of [[graft.warehouse.Warehouse.publishAtomic]]:
+    * `publish` publishes a table through it and returns the table's
+    * path, the column that keys its rows, and a call that publishes it
+    * again and returns the keys that call adds. */
+  private final case class SwapCaller(
+      name: String,
+      publish: () => (String, String, () => Set[String]))
+
+  private def keysOf(path: String, key: String): Set[String] =
+    spark.read.parquet(path).select(col(key).cast("string")).collect().map(_.getString(0)).toSet
+
+  private val swapCallers = Seq(
+    SwapCaller("recordMetadata restores the .old backup left by a crash between renames", () => {
+      val meta = freshTable() + "_meta"
+      val r = IngestJob.load(spark, "npp", write(npp(1767196019683L, "K 1", 1.0)),
+        freshTable(), runId, now)
+      IngestJob.recordMetadata(spark, meta, r, now)
+      val r2 = r.copy(runId = "650e8400-e29b-41d4-a716-446655440000")
+      (meta, "extraction_run_id", () => {
+        IngestJob.recordMetadata(spark, meta, r2, now + 1)
+        Set(r2.runId)
+      })
+    }),
+    SwapCaller("refreshView republishes the .old view a crash left before rebuilding it", () => {
+      val wh = Files.createTempDirectory("graft-swap-views").toString
+      val view = Refresh.viewPath(wh, "mv_swap")
+      var readDuringBuild = -1L
+      val job = Refresh.ViewJob("mv_swap", s => {
+        import s.implicits._
+        if (new java.io.File(view).exists) readDuringBuild = s.read.parquet(view).count()
+        Seq((1, "a"), (2, "b")).toDF("k", "v")
+      })
+      assert(Refresh.refreshView(spark, wh, job) == 2)
+      (view, "k", () => {
+        assert(Refresh.refreshView(spark, wh, job) == 2)
+        // readers see the stale view, not nothing, while it rebuilds
+        assert(readDuringBuild == 2)
+        Set.empty
+      })
+    }),
+    SwapCaller("backfill restores the .old metadata a crash left before filling its dates", () => {
+      val wh = Files.createTempDirectory("graft-swap-cli").toString
+      val f = write(
+        s"""{"extraction_run_id":"$runId","created_at_ms":$now,"timestamp_ms":1577836800000,"country_code":"DE","psr_type":"B04","plant_name":"P","fuel_type":"Fossil Gas","data_type":"Actual","generation_mw":1.0,"resolution_minutes":60}""")
+      assert(graft.Cli.run(spark, Seq("setup", "entsoe", "--warehouse", wh)) == 0)
+      assert(graft.Cli.run(spark, Seq("load-data", "entsoe", f, "--warehouse", wh)) == 0)
+      val meta = s"$wh/extraction_metadata"
+      (meta, "extraction_run_id", () => {
+        assert(graft.Cli.run(spark, Seq("backfill", "entsoe", "--warehouse", wh)) == 0)
+        assert(spark.read.parquet(meta).filter(col("start_date").isNull).isEmpty)
+        Set.empty
+      })
+    }),
+  )
+
+  // The state a crash between the swap's two renames leaves behind:
+  // the target absent, its complete previous copy at .old, and a
+  // stale .new from the interrupted write.
+  swapCallers.foreach { c =>
+    test(c.name) {
+      import spark.implicits._
+      val (path, key, republish) = c.publish()
+      val before = keysOf(path, key)
+      assert(before.nonEmpty)
+      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      assert(fs.rename(new org.apache.hadoop.fs.Path(path),
+        new org.apache.hadoop.fs.Path(path + ".old")))
+      Seq("stale").toDF("stale").write.parquet(path + ".new")
+      val added = republish()
+      val after = keysOf(path, key)
+      assert(after == before ++ added, "no prior row lost, the new ones published")
+      assert(spark.read.parquet(path).count() == after.size, "no stale or duplicated row")
+      assert(!spark.read.parquet(path).columns.contains("stale"))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(path + ".old")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(path + ".new")))
+    }
   }
 
   test("entsoe: present-but-unparseable timestamp is invalid, not inserted with NULL key") {

@@ -8,8 +8,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 # GRAFT_CLASSES: override the classes dir (e.g. a snapshot copy, so a
 # multi-hour bench keeps a stable classpath while sbt recompiles).
-# SPARK_GRAFT_SPARK_JARS: Spark jars dir — the SAME knob graft.Adjudicate
-# passes to its child JVMs, so parent and children always run one Spark.
+# SPARK_GRAFT_SPARK_JARS: Spark jars dir.
 CP="${GRAFT_CLASSES:-target/scala-2.13/classes}:${SPARK_GRAFT_SPARK_JARS:-/opt/spark/jars}/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -19,8 +18,7 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# GRAFT_JAVA_OPTS: extra JVM flags (e.g. -Dgraft.append.lock=false for
-# the bench lease-cost isolation run).
+# GRAFT_JAVA_OPTS: extra JVM flags.
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
