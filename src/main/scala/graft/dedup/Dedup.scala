@@ -38,12 +38,6 @@ object Dedup {
   def firstWinsByName(df: DataFrame, keys: Seq[String], order: Seq[String]): DataFrame =
     firstWins(df, keys.map(col), order.map(col))
 
-  /** Unordered dedup where the reference semantics don't care which
-    * duplicate survives — a hash aggregate (no sort), strictly cheaper
-    * than a window at scale. */
-  def anyWins(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** A11: duplicate-count verification,
     * `COUNT(*) - COUNT(DISTINCT key)` (reference migrations/001a:27-29,
     * 001b:53-54). Returns a 1-row frame with the residual duplicate

@@ -3,6 +3,7 @@ package graft.quality
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -160,6 +161,21 @@ object CacheScope {
     val builder = cached.queryExecution.withCachedData.collectFirst {
       case r: InMemoryRelation => r.cacheBuilder
     }
+    // Spark swaps the builder when it rebuilds the entry: releasing a
+    // cache this plan reads (non-cascading unpersist) re-caches the
+    // dependent, still-unloaded entry under a NEW builder, and
+    // consumers planned afterwards carry that one. Matching only the
+    // builder captured above then misses every later consumption and
+    // the entry outlives its action. So a consumer matches either the
+    // original builder or the one the cache manager holds for this
+    // plan now.
+    def currentBuilder: Option[AnyRef] = cached match {
+      case d: ClassicDataset[_] =>
+        try d.sparkSession.sharedState.cacheManager.lookupCachedData(d)
+          .map(_.cachedRepresentation.cacheBuilder)
+        catch { case _: Exception => None }
+      case _ => None
+    }
     val toSkip = new AtomicInteger(skipConsumptions)
     val released = new AtomicBoolean(false)
     val misses = new AtomicInteger(0)
@@ -179,10 +195,11 @@ object CacheScope {
               "fail-open releasing on the next completed query")
             true
           case Some(b) =>
-            try qe.withCachedData
-              .collect { case r: InMemoryRelation => r.cacheBuilder }
-              .exists(_ eq b)
-            catch { case _: Exception => true }
+            try {
+              val used = qe.withCachedData.collect { case r: InMemoryRelation => r.cacheBuilder }
+              used.exists(_ eq b) ||
+                (used.nonEmpty && currentBuilder.exists(cur => used.exists(_ eq cur)))
+            } catch { case _: Exception => true }
         }
         if (consumed && toSkip.getAndDecrement() <= 0) release()
         else if (!consumed && misses.incrementAndGet() >= MaxUnconsumedCompletions) {

@@ -1018,7 +1018,7 @@ object Similarity {
     * computed as doubles can disagree between engines at exact
     * power-of-two boundaries, and the DuckDB oracle replays this
     * ladder with the same integer comparisons
-    * (SparkEntry.adaptiveBitsSql). This is the lever that makes
+    * (OracleSql.adaptiveBitsSql). This is the lever that makes
     * [[lshMultiProbeTopK]]'s candidate volume SUBLINEAR in the corpus:
     * bits (and with them bucket count) rise with log n, so
     * candidates/query ≈ probes(b)·n/2^b ≈ probes(b)·targetBucket grows

@@ -241,60 +241,64 @@ object StreamingIngest {
         val fs = org.apache.hadoop.fs.FileSystem
           .get(spark.sparkContext.hadoopConfiguration)
         val haveIndex = fs.exists(new org.apache.hadoop.fs.Path(bucketIndexPath))
-        val local = graft.text.TextDedup.minhashDedup(
-          batch.toDF(), idCol, textCol, threshold, k, numHashes, bands)
-        val hashed = graft.text.TextDedup
-          .withHashedShingles(local, textCol, k, "sh").select(col(idCol), col("sh"))
-        val buckets = graft.text.TextDedup
-          .minhashBuckets(local, idCol, textCol, k, numHashes, bands)
-        // same (band, bucket) gate as the batch incremental dedup —
-        // TextDedup.collisionGate IS the shared kernel; with
-        // verifyJaccard the index additionally carries per-doc bucket
-        // rows + a shingle store and the gate upgrades to the
-        // exact-jaccard-verified form (TextDedup.verifiedCollisionGate
-        // — stream admission ≡ batch semantics, at the cost of the
-        // candidate-volume verify joins and the (id, sh) state)
-        val shinglePath = bucketIndexPath.stripSuffix("/") + "_sh"
-        val admitted =
-          if (!haveIndex) local
-          else if (!verifyJaccard)
-            graft.text.TextDedup.collisionGate(
-              local, buckets, spark.read.parquet(bucketIndexPath), idCol)
+        // one shingle pass (the batch admission core, TextDedup.
+        // minhashDedupHashed) feeds the in-batch dedup, the survivor
+        // buckets and the (id, sh) store rows; the shared scope keeps
+        // its caches alive across the appends below
+        graft.quality.CacheScope.shared {
+          val (local, hashed) = graft.text.TextDedup.minhashDedupHashed(
+            batch.toDF(), idCol, textCol, threshold, k, numHashes, bands,
+            graft.text.TextDedup.DefaultMaxBucketSize)
+          val buckets = graft.text.TextDedup.bucketsOfHashed(hashed, idCol, numHashes, bands)
+          // same (band, bucket) gate as the batch incremental dedup —
+          // TextDedup.collisionGate IS the shared kernel; with
+          // verifyJaccard the index additionally carries per-doc bucket
+          // rows + a shingle store and the gate upgrades to the
+          // exact-jaccard-verified form (TextDedup.verifiedCollisionGate
+          // — stream admission ≡ batch semantics, at the cost of the
+          // candidate-volume verify joins and the (id, sh) state)
+          val shinglePath = bucketIndexPath.stripSuffix("/") + "_sh"
+          val admitted =
+            if (!haveIndex) local
+            else if (!verifyJaccard)
+              graft.text.TextDedup.collisionGate(
+                local, buckets, spark.read.parquet(bucketIndexPath), idCol)
+            else {
+              val store = spark.read.parquet(shinglePath)
+              // pre-round-12 stores hold raw `sh` arrays; the packed
+              // gate would fail on the missing `shp` column with an
+              // opaque resolution error — name the migration instead
+              require(store.columns.contains("shp"),
+                s"shingle store at $shinglePath uses the retired raw-array " +
+                  "layout (columns: " + store.columns.mkString(", ") + "); " +
+                  "re-drain into a fresh index/store path, or rewrite it once " +
+                  "with TextDedup.packedShingles(col(\"sh\")) as `shp`")
+              graft.text.TextDedup.verifiedCollisionGatePacked(
+                local, hashed, buckets,
+                spark.read.parquet(bucketIndexPath),
+                store, idCol, threshold)
+            }
+          graft.sink.IdempotentAppend.appendNew(
+            spark, admitted, admittedPath, Seq(idCol), timeCol = None)
+          if (!verifyJaccard)
+            graft.sink.IdempotentAppend.appendNew(
+              spark,
+              buckets.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
+                .select(col("band"), col("bucket")).distinct(),
+              bucketIndexPath, Seq("band", "bucket"), timeCol = None)
           else {
-            val store = spark.read.parquet(shinglePath)
-            // pre-round-12 stores hold raw `sh` arrays; the packed
-            // gate would fail on the missing `shp` column with an
-            // opaque resolution error — name the migration instead
-            require(store.columns.contains("shp"),
-              s"shingle store at $shinglePath uses the retired raw-array " +
-                "layout (columns: " + store.columns.mkString(", ") + "); " +
-                "re-drain into a fresh index/store path, or rewrite it once " +
-                "with TextDedup.packedShingles(col(\"sh\")) as `shp`")
-            graft.text.TextDedup.verifiedCollisionGatePacked(
-              local, hashed, buckets,
-              spark.read.parquet(bucketIndexPath),
-              store, idCol, threshold)
+            graft.sink.IdempotentAppend.appendNew(
+              spark,
+              buckets.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
+                .select(col("band"), col("bucket"), col(idCol)).distinct(),
+              bucketIndexPath, Seq("band", "bucket", idCol), timeCol = None)
+            graft.sink.IdempotentAppend.appendNew(
+              spark,
+              hashed.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
+                .select(col(idCol),
+                  graft.text.TextDedup.packedShingles(col("sh")).as("shp")),
+              shinglePath, Seq(idCol), timeCol = None)
           }
-        graft.sink.IdempotentAppend.appendNew(
-          spark, admitted, admittedPath, Seq(idCol), timeCol = None)
-        if (!verifyJaccard)
-          graft.sink.IdempotentAppend.appendNew(
-            spark,
-            buckets.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
-              .select(col("band"), col("bucket")).distinct(),
-            bucketIndexPath, Seq("band", "bucket"), timeCol = None)
-        else {
-          graft.sink.IdempotentAppend.appendNew(
-            spark,
-            buckets.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
-              .select(col("band"), col("bucket"), col(idCol)).distinct(),
-            bucketIndexPath, Seq("band", "bucket", idCol), timeCol = None)
-          graft.sink.IdempotentAppend.appendNew(
-            spark,
-            hashed.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
-              .select(col(idCol),
-                graft.text.TextDedup.packedShingles(col("sh")).as("shp")),
-            shinglePath, Seq(idCol), timeCol = None)
         }
         ()
       }

@@ -89,7 +89,7 @@ object Sketches {
   private def requireCmsParams(depth: Int, width: Int): Unit = {
     // depth caps at 30, not 32: each row j draws its permutation from
     // the same [[GHash.permA]]/[[GHash.permB]] stream the DuckDB
-    // oracle materializes as a 30-entry list (SparkEntry.MinhashH) —
+    // oracle materializes as a 30-entry list (OracleSql.MinhashH) —
     // a depth beyond that list would index the oracle's array out of
     // bounds (NULL in DuckDB) and silently corrupt its buckets.
     require(depth >= 1 && depth <= 30, s"depth must be in [1,30], got $depth")

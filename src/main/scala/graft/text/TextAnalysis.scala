@@ -81,9 +81,6 @@ object TextAnalysis {
   /** CJK ideograph detection for zh (codepoint-range n-gram test). */
   val ZhPattern = graft.functions.GraftTextPatterns.ZhPattern
 
-  def langScore(text: Column, pattern: String): Column =
-    size(regexp_extract_all(coalesce(text, lit("")), lit(pattern), lit(0)))
-
   /** Predicted language = argmax over marker-hit counts; no hits →
     * 'und'. Tie-break: `greatest` over (score, lang) structs picks the
     * lexicographically LARGEST language code on a score tie (zh > fr >
@@ -109,8 +106,6 @@ object TextAnalysis {
   // Quality scoring: length / punctuation / stopword / word-shape
   // ratios, the standard cheap pre-filter for web-scale corpora.
   // -------------------------------------------------------------------
-
-  def punctCount(text: Column): Column = statsOf(text).getField("punct")
 
   def stopwordCount(text: Column): Column = statsOf(text).getField("en")
 

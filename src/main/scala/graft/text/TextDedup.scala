@@ -185,7 +185,7 @@ object TextDedup {
 
   /** Band-bucket assignments from a pre-hashed frame (id, sh):
     * b rows per doc — the scale-safe join key for candidate pairs. */
-  private def bucketsOfHashed(
+  private[graft] def bucketsOfHashed(
       hashed: DataFrame,
       idCol: String,
       numHashes: Int,
@@ -209,18 +209,6 @@ object TextDedup {
     bucketsOfHashed(
       withHashedShingles(df, textCol, k, "sh").select(col(idCol), col("sh")),
       idCol, numHashes, bands)
-
-  /** Candidate pairs = distinct id pairs sharing ≥1 (band, bucket).
-    * Self-join shuffles on (band,bucket) — bounded by collision counts,
-    * never O(n²). */
-  def candidatePairs(buckets: DataFrame, idCol: String): DataFrame = {
-    val a = buckets.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-    val b = buckets.select(col("band"), col("bucket"), col(idCol).as("id_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-  }
 
   /** Exact word-shingle Jaccard for given pairs (verification step). */
   def verifyJaccard(
@@ -706,6 +694,29 @@ object TextDedup {
       bands: Int = 6,
       maxBucketSize: Int = DefaultMaxBucketSize,
   ): DataFrame = {
+    val (local, surviving) = minhashDedupHashed(
+      batch, idCol, textCol, threshold, k, numHashes, bands, maxBucketSize)
+    collisionGate(local, bucketsOfHashed(surviving, idCol, numHashes, bands),
+      baseBuckets.select(col("band"), col("bucket")), idCol)
+  }
+
+  /** The batch side of MinHash admission: [[minhashDedup]]'s
+    * keep-min-id survivors of `batch` as `(local, surviving)` — the
+    * surviving batch rows, and one `(idCol, sh)` row per survivor
+    * from the same single shingle pass, ready for [[bucketsOfHashed]]
+    * and for a verified gate or shingle store. Shared by
+    * [[minhashDedupAgainstBaseBuckets]] and the streaming near-dup
+    * gate. */
+  private[graft] def minhashDedupHashed(
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      threshold: Double,
+      k: Int,
+      numHashes: Int,
+      bands: Int,
+      maxBucketSize: Int,
+  ): (DataFrame, DataFrame) = {
     // ONE shingle/fingerprint pass over the batch feeds the internal
     // dedup AND the survivor bucket derivation. Pre-r16 this called
     // minhashDedup(batch) and then minhashBuckets(local) on its OUTPUT
@@ -736,8 +747,7 @@ object TextDedup {
     val surviving = CacheScope.cachedUntilAction(reps.select(col(idCol), col("sh"))
       .join(repLosers, Seq(idCol), "left_anti"))
     val local = batch.join(surviving.select(col(idCol)), Seq(idCol), "left_semi")
-    collisionGate(local, bucketsOfHashed(surviving, idCol, numHashes, bands),
-      baseBuckets.select(col("band"), col("bucket")), idCol)
+    (local, surviving)
   }
 
   // -------------------------------------------------------------------

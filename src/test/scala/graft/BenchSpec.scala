@@ -168,9 +168,9 @@ class BenchSpec extends AnyFunSuite {
       val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
       "Window\\s*\\.\\s*orderBy".r.findAllIn(text).map(_ => p.toString)
     }
-    assert(offenders.size == 1 && offenders.head.endsWith("SparkEntry.scala"),
+    assert(offenders.size == 1 && offenders.head.endsWith("queries/EtlQueries.scala"),
       s"unpartitioned Window.orderBy sites: $offenders — only the bounded " +
-        "monthly series in SparkEntry (w2_mom_delta) is allowed; use " +
+        "monthly series in EtlQueries (w2_mom_delta) is allowed; use " +
         "Window.partitionBy(...).orderBy(...) elsewhere")
   }
 

@@ -1,6 +1,8 @@
 package graft.quality
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
 import graft.text.TextDedup
@@ -30,20 +32,67 @@ class CacheScopeSpec extends SparkSpec {
       "InMemoryRelation survived a completed query — the scoped release did not fire")
   }
 
+  /** Records the session's completed queries. Registered AFTER the
+    * scoped caches' release listeners, it is called after them for
+    * every completion (one session's listeners run in registration
+    * order), so once it has seen a query complete, every release that
+    * completion triggers has already run. */
+  private final class CompletionProbe extends QueryExecutionListener {
+    private val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[QueryExecution]()
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      seen.add(qe): Unit
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      seen.add(qe): Unit
+    /** `df`'s row count as one action, returned once the session's
+      * listeners have handled its completion. */
+    def countSettled(df: DataFrame): Long = {
+      val q = df.groupBy().count()
+      val n = q.collect().head.getLong(0)
+      assert(eventually()(seen.contains(q.queryExecution)),
+        "a completed query never reached the session's listeners")
+      n
+    }
+  }
+
+  private def withProbe[T](body: CompletionProbe => T): T = {
+    val probe = new CompletionProbe
+    spark.listenerManager.register(probe)
+    try body(probe) finally spark.listenerManager.unregister(probe)
+  }
+
+  /** The session cache holds an entry for `df`'s plan. */
+  private def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
+
   test("retainAcrossOwnAction: the cache survives the operator's own action, releases after the caller's") {
     spark.catalog.clearCache()
     val (df, owned) = CacheScope.acquire((1 to 100).toDF("n"))
     assert(owned)
     CacheScope.retainAcrossOwnAction(df)
-    // the operator's own gate count — the FIRST consumption, skipped
-    assert(df.count() == 100)
-    Thread.sleep(700) // give the async bus time to deliver (and be skipped)
-    assert(df.storageLevel != StorageLevel.NONE && !cacheEmpty,
-      "the gate count released the cache the returned plan was about to reuse")
-    // the caller's action — the SECOND consumption releases
-    assert(df.count() == 100)
-    assert(eventually()(cacheEmpty),
-      "InMemoryRelation survived the caller's completed query")
+    withProbe { probe =>
+      // the operator's own gate count — the FIRST consumption, skipped
+      assert(probe.countSettled(df) == 100)
+      assert(cached(df),
+        "the gate count released the cache the returned plan was about to reuse")
+      // the caller's action — the SECOND consumption releases
+      assert(probe.countSettled(df) == 100)
+      assert(!cached(df), "InMemoryRelation survived the caller's completed query")
+    }
+  }
+
+  test("a dependent scoped cache that Spark rebuilds still releases after its consuming action") {
+    // Releasing `parent` (a non-cascading unpersist) makes Spark rebuild
+    // the still-unloaded `child` entry under a new cache builder; the
+    // child's release must still recognize the query that reads it.
+    spark.catalog.clearCache()
+    val parent = CacheScope.cachedUntilAction((1 to 1000).toDF("n"))
+    val child = CacheScope.cachedUntilAction(parent.filter($"n" % 2 === 0))
+    withProbe { probe =>
+      assert(probe.countSettled(parent) == 1000) // reads parent only
+      assert(!cached(parent), "parent survived its consuming query")
+      assert(cached(child), "child was dropped with its parent")
+      assert(probe.countSettled(child) == 500)
+      assert(!cached(child), "the rebuilt child entry survived its consuming query")
+    }
   }
 
   test("retainAcrossOwnAction: concurrent unrelated actions in the window never release early") {

@@ -75,4 +75,24 @@ class QualityClassifierSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq
     assert(v == v2)
   }
+
+  test("driver vocabulary order is the engine's UTF-8 byte order, not UTF-16") {
+    // U+E000 is one UTF-16 unit (0xE000) and three UTF-8 bytes (EE ..);
+    // U+1F600 is a surrogate pair (0xD83D ..) and four bytes (F0 ..):
+    // Java String order and the engine's byte order disagree on them.
+    val bmpHigh = "\uE000"
+    val supp = new String(Character.toChars(0x1F600))
+    assert(supp.compareTo(bmpHigh) < 0) // UTF-16 order: supp first
+    // every doc carries every token once, so all dfs tie and the
+    // vocabulary order is the token order alone
+    val docs = (0L until 12L).map { i =>
+      (i, Seq("beta", supp, "alpha", bmpHigh, "zeta").mkString(" "), i % 2 == 0)
+    }.toDF("doc_id", "text", "label")
+    val engine = QualityClassifier.vocabulary(docs, "doc_id", "text", 10)
+      .collect().map(_.getString(0)).toSeq
+    assert(engine == Seq("alpha", "beta", "zeta", bmpHigh, supp))
+    val model = QualityClassifier.train(docs, "doc_id", "text", "label",
+      topV = 10, steps = 1)
+    assert(model.weights.map(_._1) == engine)
+  }
 }
