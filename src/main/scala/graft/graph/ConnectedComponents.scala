@@ -105,6 +105,8 @@ private[graph] final class LongLongMap(expectedEntries: Int) {
   }
 
   private def grow(): Unit = {
+    // the constructor's bound: doubling past 2^30 slots overflows Int
+    require(cap < (1 << 30), s"LongLongMap cannot grow past ${1 << 30} slots ($n entries)")
     val ok = keys; val ov = vals; val ou = used; val oc = cap
     cap <<= 1
     mask = cap - 1

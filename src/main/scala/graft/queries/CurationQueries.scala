@@ -109,6 +109,48 @@ private[graft] object CurationQueries {
        |    ELSE ROUND(CAST(COALESCE(s.n_suspect, 0) AS DOUBLE) / CAST(ng.n_grams AS DOUBLE), 6) END AS suspicion
        |FROM ng LEFT JOIN sus s ON s.doc_id = ng.doc_id""".stripMargin
 
+  /** The oracle prefix tp2 and tp12 share: tp1's deterministic chain
+    * (annotate → quality/language/token gate → exact dedup) composed
+    * with the linear MinHash replay over its survivors, ending in the
+    * `reps` and `losers` CTEs the two queries select from. */
+  private lazy val CuratedLinearCtesSql =
+    s"""WITH raw AS (
+       |  SELECT doc_id, text,
+       |    CAST(LENGTH(text) AS DOUBLE) AS chars,
+       |    CASE WHEN TRIM(text) = '' THEN 0.0
+       |      ELSE CAST(len(string_split_regex(TRIM(text), '\\s+')) AS DOUBLE) END AS toks,
+       |    CAST(len(regexp_extract_all(text, '[[:punct:]]')) AS DOUBLE) AS punct,
+       |    CASE WHEN TRIM(text) = '' THEN 0.0
+       |      ELSE CAST(list_sum(list_transform(string_split_regex(TRIM(text), '\\s+'), w -> LENGTH(w))) AS DOUBLE)
+       |        / len(string_split_regex(TRIM(text), '\\s+')) END AS mwl,
+       |    len(regexp_extract_all(text, '(?i)\\b(the|and|of|to|in|is|that|with|for|was)\\b')) AS en,
+       |    len(regexp_extract_all(text, '(?i)\\b(der|die|das|und|ist|nicht|ein|eine|mit|von)\\b')) AS de,
+       |    len(regexp_extract_all(text, '(?i)\\b(le|la|les|et|est|une|des|dans|pour|que)\\b')) AS fr,
+       |    len(regexp_extract_all(text, '(?i)\\b(el|los|las|es|una|para|con|por|del|como)\\b')) AS es,
+       |    3 * len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) AS zh,
+       |    md5(TRIM(regexp_replace(LOWER(text), '\\s+', ' ', 'g'))) AS fp
+       |  FROM documents),
+       |m AS (SELECT *, GREATEST(en, de, fr, es, zh) AS mx FROM raw),
+       |ann AS (
+       |  SELECT doc_id, text, fp,
+       |    CASE WHEN mx <= 0 THEN 'und'
+       |      WHEN zh = mx THEN 'zh' WHEN fr = mx THEN 'fr' WHEN es = mx THEN 'es'
+       |      WHEN en = mx THEN 'en' ELSE 'de' END AS curation_lang,
+       |    ROUND(0.4 * LEAST(chars / 200.0, 1.0)
+       |      + 0.2 * (CASE WHEN toks = 0 THEN 0.0 ELSE LEAST(en / toks, 0.5) * 2.0 END)
+       |      + 0.2 * (CASE WHEN toks = 0 THEN 0.0 ELSE LEAST(mwl / 5.0, 1.0) END)
+       |      + 0.2 * (1.0 - LEAST((CASE WHEN chars = 0 THEN 1.0 ELSE punct / chars END) * 5.0, 1.0)), 6) AS curation_quality,
+       |    CAST(toks AS INT) AS curation_tokens
+       |  FROM m),
+       |exact AS (
+       |  SELECT doc_id, text, curation_lang, curation_quality, curation_tokens
+       |  FROM ann
+       |  WHERE curation_quality >= 0.6 AND curation_lang = 'en'
+       |    AND curation_tokens BETWEEN 20 AND 1048576
+       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) = 1),
+       |${minhashCtes("exact")},
+       |$LinearLosersCtes""".stripMargin
+
   // Token-budget corpus mixing: each source keeps documents in a
   // deterministic md5-shuffled order until its char budget is spent
   // (boundary straddler kept, like tp3 packing). The absolute-budget
@@ -209,42 +251,7 @@ private[graft] object CurationQueries {
       // tp1's deterministic prefix (annotate → filter → exact dedup,
       // the oracle-proven SQL) composed with the linear MinHash stage —
       // the full Curation.curate pipeline, now hash-checked end to end.
-      s"""WITH raw AS (
-         |  SELECT doc_id, text,
-         |    CAST(LENGTH(text) AS DOUBLE) AS chars,
-         |    CASE WHEN TRIM(text) = '' THEN 0.0
-         |      ELSE CAST(len(string_split_regex(TRIM(text), '\\s+')) AS DOUBLE) END AS toks,
-         |    CAST(len(regexp_extract_all(text, '[[:punct:]]')) AS DOUBLE) AS punct,
-         |    CASE WHEN TRIM(text) = '' THEN 0.0
-         |      ELSE CAST(list_sum(list_transform(string_split_regex(TRIM(text), '\\s+'), w -> LENGTH(w))) AS DOUBLE)
-         |        / len(string_split_regex(TRIM(text), '\\s+')) END AS mwl,
-         |    len(regexp_extract_all(text, '(?i)\\b(the|and|of|to|in|is|that|with|for|was)\\b')) AS en,
-         |    len(regexp_extract_all(text, '(?i)\\b(der|die|das|und|ist|nicht|ein|eine|mit|von)\\b')) AS de,
-         |    len(regexp_extract_all(text, '(?i)\\b(le|la|les|et|est|une|des|dans|pour|que)\\b')) AS fr,
-         |    len(regexp_extract_all(text, '(?i)\\b(el|los|las|es|una|para|con|por|del|como)\\b')) AS es,
-         |    3 * len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) AS zh,
-         |    md5(TRIM(regexp_replace(LOWER(text), '\\s+', ' ', 'g'))) AS fp
-         |  FROM documents),
-         |m AS (SELECT *, GREATEST(en, de, fr, es, zh) AS mx FROM raw),
-         |ann AS (
-         |  SELECT doc_id, text, fp,
-         |    CASE WHEN mx <= 0 THEN 'und'
-         |      WHEN zh = mx THEN 'zh' WHEN fr = mx THEN 'fr' WHEN es = mx THEN 'es'
-         |      WHEN en = mx THEN 'en' ELSE 'de' END AS curation_lang,
-         |    ROUND(0.4 * LEAST(chars / 200.0, 1.0)
-         |      + 0.2 * (CASE WHEN toks = 0 THEN 0.0 ELSE LEAST(en / toks, 0.5) * 2.0 END)
-         |      + 0.2 * (CASE WHEN toks = 0 THEN 0.0 ELSE LEAST(mwl / 5.0, 1.0) END)
-         |      + 0.2 * (1.0 - LEAST((CASE WHEN chars = 0 THEN 1.0 ELSE punct / chars END) * 5.0, 1.0)), 6) AS curation_quality,
-         |    CAST(toks AS INT) AS curation_tokens
-         |  FROM m),
-         |exact AS (
-         |  SELECT doc_id, text, curation_lang, curation_quality, curation_tokens
-         |  FROM ann
-         |  WHERE curation_quality >= 0.6 AND curation_lang = 'en'
-         |    AND curation_tokens BETWEEN 20 AND 1048576
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) = 1),
-         |${minhashCtes("exact")},
-         |$LinearLosersCtes
+      s"""$CuratedLinearCtesSql
          |SELECT e.doc_id, e.curation_lang, e.curation_quality, e.curation_tokens
          |FROM exact e
          |JOIN (SELECT rep_id FROM reps WHERE rep_id NOT IN (SELECT rep_id FROM losers)) s
@@ -368,42 +375,7 @@ private[graft] object CurationQueries {
       // extended stage-for-stage: the 60-bit weighted draw, the
       // token-budget window, and the shard/pos assignment — each the
       // already-proven replay with the tp12 salts.
-      s"""WITH raw AS (
-         |  SELECT doc_id, text,
-         |    CAST(LENGTH(text) AS DOUBLE) AS chars,
-         |    CASE WHEN TRIM(text) = '' THEN 0.0
-         |      ELSE CAST(len(string_split_regex(TRIM(text), '\\s+')) AS DOUBLE) END AS toks,
-         |    CAST(len(regexp_extract_all(text, '[[:punct:]]')) AS DOUBLE) AS punct,
-         |    CASE WHEN TRIM(text) = '' THEN 0.0
-         |      ELSE CAST(list_sum(list_transform(string_split_regex(TRIM(text), '\\s+'), w -> LENGTH(w))) AS DOUBLE)
-         |        / len(string_split_regex(TRIM(text), '\\s+')) END AS mwl,
-         |    len(regexp_extract_all(text, '(?i)\\b(the|and|of|to|in|is|that|with|for|was)\\b')) AS en,
-         |    len(regexp_extract_all(text, '(?i)\\b(der|die|das|und|ist|nicht|ein|eine|mit|von)\\b')) AS de,
-         |    len(regexp_extract_all(text, '(?i)\\b(le|la|les|et|est|une|des|dans|pour|que)\\b')) AS fr,
-         |    len(regexp_extract_all(text, '(?i)\\b(el|los|las|es|una|para|con|por|del|como)\\b')) AS es,
-         |    3 * len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) AS zh,
-         |    md5(TRIM(regexp_replace(LOWER(text), '\\s+', ' ', 'g'))) AS fp
-         |  FROM documents),
-         |m AS (SELECT *, GREATEST(en, de, fr, es, zh) AS mx FROM raw),
-         |ann AS (
-         |  SELECT doc_id, text, fp,
-         |    CASE WHEN mx <= 0 THEN 'und'
-         |      WHEN zh = mx THEN 'zh' WHEN fr = mx THEN 'fr' WHEN es = mx THEN 'es'
-         |      WHEN en = mx THEN 'en' ELSE 'de' END AS curation_lang,
-         |    ROUND(0.4 * LEAST(chars / 200.0, 1.0)
-         |      + 0.2 * (CASE WHEN toks = 0 THEN 0.0 ELSE LEAST(en / toks, 0.5) * 2.0 END)
-         |      + 0.2 * (CASE WHEN toks = 0 THEN 0.0 ELSE LEAST(mwl / 5.0, 1.0) END)
-         |      + 0.2 * (1.0 - LEAST((CASE WHEN chars = 0 THEN 1.0 ELSE punct / chars END) * 5.0, 1.0)), 6) AS curation_quality,
-         |    CAST(toks AS INT) AS curation_tokens
-         |  FROM m),
-         |exact AS (
-         |  SELECT doc_id, text, curation_lang, curation_quality, curation_tokens
-         |  FROM ann
-         |  WHERE curation_quality >= 0.6 AND curation_lang = 'en'
-         |    AND curation_tokens BETWEEN 20 AND 1048576
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) = 1),
-         |${minhashCtes("exact")},
-         |$LinearLosersCtes,
+      s"""$CuratedLinearCtesSql,
          |surv AS (
          |  SELECT e.doc_id, e.curation_quality, e.curation_tokens, d.source
          |  FROM exact e

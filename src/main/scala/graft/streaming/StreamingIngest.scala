@@ -280,25 +280,21 @@ object StreamingIngest {
             }
           graft.sink.IdempotentAppend.appendNew(
             spark, admitted, admittedPath, Seq(idCol), timeCol = None)
-          if (!verifyJaccard)
-            graft.sink.IdempotentAppend.appendNew(
-              spark,
-              buckets.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
-                .select(col("band"), col("bucket")).distinct(),
-              bucketIndexPath, Seq("band", "bucket"), timeCol = None)
-          else {
-            graft.sink.IdempotentAppend.appendNew(
-              spark,
-              buckets.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
-                .select(col("band"), col("bucket"), col(idCol)).distinct(),
-              bucketIndexPath, Seq("band", "bucket", idCol), timeCol = None)
+          // the admitted docs register their buckets: distinct keys, or
+          // per-doc rows plus the packed shingle store when verifying
+          val indexKeys = Seq("band", "bucket") ++ (if (verifyJaccard) Seq(idCol) else Nil)
+          graft.sink.IdempotentAppend.appendNew(
+            spark,
+            buckets.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
+              .select(indexKeys.map(col): _*).distinct(),
+            bucketIndexPath, indexKeys, timeCol = None)
+          if (verifyJaccard)
             graft.sink.IdempotentAppend.appendNew(
               spark,
               hashed.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
                 .select(col(idCol),
                   graft.text.TextDedup.packedShingles(col("sh")).as("shp")),
               shinglePath, Seq(idCol), timeCol = None)
-          }
         }
         ()
       }

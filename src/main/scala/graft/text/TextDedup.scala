@@ -119,6 +119,24 @@ object TextDedup {
   private def jaccardSorted(a: Column, b: Column): Column =
     round(call_function("graft_jaccard_sorted", a, b), 6)
 
+  // MinHash LSH is four stages, each written once: hash ([[hashedOf]])
+  // → band ([[bandsOf]]) → candidates → verify ([[pairJaccard]]). The
+  // candidate stage has three variants: the capped all-pairs cascade
+  // ([[nearDupPairsOfHashed]]), the linear min-id representative
+  // ([[minhashDedupLinear]]) and the index gate ([[indexGate]]).
+
+  /** Hash stage: the shingle pass `(idCol, sh, _fp = xxhash64(sh))`
+    * every batch-side entry point starts from. The shingle-hash scan
+    * feeds the band explode AND the survivor-fetch joins (different
+    * shuffle keys, so no exchange reuse) — cache it once instead of
+    * recomputing the tokenize/shingle/hash chain per consumer.
+    * Action-scoped: released as soon as the caller's query completes
+    * (CacheScope), so long-lived sessions accumulate nothing. */
+  private def hashedOf(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    CacheScope.cachedUntilAction(
+      withHashedShingles(docs, textCol, k, "sh")
+        .select(col(idCol), col("sh"), xxhash64(col("sh")).as("_fp")))
+
   /** Min-id representative per identical-shingle-set group, over a
     * CACHED `hashed` frame carrying (idCol, sh, _fp = xxhash64(sh)).
     * Returns (repIds, reps):
@@ -183,6 +201,15 @@ object TextDedup {
       )
     }: _*)
 
+  /** Band stage: b rows per doc of `signed`, the `keep` columns plus
+    * (band, bucket). The signature must be the BOUND column `_sig`, so
+    * it is computed once per row and never once per band. */
+  private def bandsOf(signed: DataFrame, keep: Seq[String], numHashes: Int, bands: Int): DataFrame =
+    signed
+      .select(keep.map(col) :+
+        explode(bandKeys(col("_sig"), bands, numHashes / bands)).as("bb"): _*)
+      .select(keep.map(col) ++ Seq(col("bb.band").as("band"), col("bb.bucket").as("bucket")): _*)
+
   /** Band-bucket assignments from a pre-hashed frame (id, sh):
     * b rows per doc — the scale-safe join key for candidate pairs. */
   private[graft] def bucketsOfHashed(
@@ -190,13 +217,9 @@ object TextDedup {
       idCol: String,
       numHashes: Int,
       bands: Int,
-  ): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    hashed
-      .withColumn("_sig", minhashSignature(col("sh"), numHashes))
-      .select(col(idCol), explode(bandKeys(col("_sig"), bands, rowsPerBand)).as("bb"))
-      .select(col(idCol), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
+  ): DataFrame =
+    bandsOf(hashed.withColumn("_sig", minhashSignature(col("sh"), numHashes)),
+      Seq(idCol), numHashes, bands)
 
   def minhashBuckets(
       df: DataFrame,
@@ -210,6 +233,25 @@ object TextDedup {
       withHashedShingles(df, textCol, k, "sh").select(col(idCol), col("sh")),
       idCol, numHashes, bands)
 
+  /** Verify stage: fetch both shingle sets of every candidate pair by
+    * id (joins on the candidate subset, never the corpus) and bind
+    * their exact jaccard as `jaccard`. `a` and `b` are (pair key,
+    * shingle set) frames; `jaccard` is the kernel for their form. */
+  private def pairJaccard(pairs: DataFrame, a: DataFrame, b: DataFrame)(
+      jaccard: (Column, Column) => Column): DataFrame = {
+    val Array(keyA, shA) = a.columns
+    val Array(keyB, shB) = b.columns
+    pairs.join(a, Seq(keyA)).join(b, Seq(keyB))
+      .withColumn("jaccard", jaccard(col(shA), col(shB)))
+  }
+
+  /** [[pairJaccard]] of (id_a, id_b) pairs whose both sides come from
+    * one hashed (idCol, sh) frame. */
+  private def jaccardOfPairs(pairs: DataFrame, sh: DataFrame, idCol: String): DataFrame =
+    pairJaccard(pairs,
+      sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")),
+      sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")))(jaccardSorted)
+
   /** Exact word-shingle Jaccard for given pairs (verification step). */
   def verifyJaccard(
       pairs: DataFrame,
@@ -217,14 +259,10 @@ object TextDedup {
       idCol: String,
       textCol: String,
       k: Int = 3,
-  ): DataFrame = {
-    val sh = withHashedShingles(docs, textCol, k, "sh").select(col(idCol), col("sh"))
-    pairs
-      .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
+  ): DataFrame =
+    jaccardOfPairs(pairs,
+      withHashedShingles(docs, textCol, k, "sh").select(col(idCol), col("sh")), idCol)
       .drop("sh_a", "sh_b")
-  }
 
   /** Candidates → verified pairs over a pre-hashed (id, sh) frame.
     *
@@ -309,11 +347,7 @@ object TextDedup {
       .filter(col(idCol).isNotNull)
       .select(col(idCol).cast("long").as("_mid"),
         minhashSignature(col("sh"), numHashes).as("_sig")))
-    val banded = sigs
-      .select(col("_mid"), col("_sig"),
-        explode(bandKeys(col("_sig"), bands, rpb)).as("bb"))
-      .select(col("_mid"), col("_sig"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    val banded = bandsOf(sigs, Seq("_mid", "_sig"), numHashes, bands)
     val over = col("_n") > maxBucketSize
     // Two-phase size gate, flat memory at ANY skew. Phase 1 computes
     // per-(band,bucket) count + min-id representative in a CONSTANT
@@ -377,15 +411,25 @@ object TextDedup {
       .filter(call_function("graft_rep_first_band",
         col("_rep_sig"), col("_sig"), lit(rpb), lit(minAgree)) === col("band"))
       .select(col("_rep_id").as("id_a"), col("_mid").as("id_b"))
-    val candidates = smallPairs.unionByName(overPairs)
-    val sh = hashed.select(col(idCol), col("sh"))
-    candidates
-      .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
+    jaccardOfPairs(smallPairs.unionByName(overPairs), hashed.select(col(idCol), col("sh")), idCol)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
+
+  /** The keep-min-id drop set of the cascade: every representative
+    * with a smaller-id near-dup representative. */
+  private def repLosers(
+      reps: DataFrame,
+      idCol: String,
+      threshold: Double,
+      numHashes: Int,
+      bands: Int,
+      maxBucketSize: Int,
+  ): DataFrame =
+    nearDupPairsOfHashed(reps.select(col(idCol), col("sh")),
+        idCol, threshold, numHashes, bands, maxBucketSize)
+      .select(col("id_b").as(idCol))
+      .distinct()
 
   /** Full MinHash near-dup pipeline: bucket → candidates → verify →
     * keep pairs with jaccard ≥ threshold.
@@ -410,15 +454,7 @@ object TextDedup {
       bands: Int = 6,
       maxBucketSize: Int = DefaultMaxBucketSize,
   ): DataFrame = {
-    // The shingle-hash scan feeds the band explode AND the survivor-
-    // fetch joins (different shuffle keys, so no exchange reuse) —
-    // cache it once instead of recomputing the tokenize/shingle/hash
-    // chain per consumer. Action-scoped: released as soon as the
-    // caller's query completes (CacheScope), so long-lived sessions
-    // accumulate nothing.
-    val hashed = CacheScope.cachedUntilAction(
-      withHashedShingles(docs, textCol, k, "sh")
-        .select(col(idCol), col("sh"), xxhash64(col("sh")).as("_fp")))
+    val hashed = hashedOf(docs, idCol, textCol, k)
     val (repIds, reps) = repsOfHashed(hashed, idCol)
     val members = hashed.select(col("_fp"), col(idCol))
 
@@ -466,17 +502,9 @@ object TextDedup {
       bands: Int = 6,
       maxBucketSize: Int = DefaultMaxBucketSize,
   ): DataFrame = {
-    // cached for the same multi-consumer reason (and with the same
-    // action-scoped lifetime) as minhashNearDupPairs
-    val hashed = CacheScope.cachedUntilAction(
-      withHashedShingles(docs, textCol, k, "sh")
-        .select(col(idCol), col("sh"), xxhash64(col("sh")).as("_fp")))
-    val (repIds, reps) = repsOfHashed(hashed, idCol)
-    val repLosers = nearDupPairsOfHashed(reps, idCol, threshold, numHashes, bands,
-        maxBucketSize)
-      .select(col("id_b").as(idCol))
-      .distinct()
-    val survivors = repIds.select(col(idCol)).join(repLosers, Seq(idCol), "left_anti")
+    val (repIds, reps) = repsOfHashed(hashedOf(docs, idCol, textCol, k), idCol)
+    val survivors = repIds.select(col(idCol)).join(
+      repLosers(reps, idCol, threshold, numHashes, bands, maxBucketSize), Seq(idCol), "left_anti")
     docs.join(survivors, Seq(idCol), "left_semi")
   }
 
@@ -502,18 +530,10 @@ object TextDedup {
       numHashes: Int = 30,
       bands: Int = 6,
   ): DataFrame = {
-    val rpb = numHashes / bands
-    val hashed = CacheScope.cachedUntilAction(
-      withHashedShingles(docs, textCol, k, "sh")
-        .select(col(idCol), col("sh"), xxhash64(col("sh")).as("_fp")))
-    val reps = repsOfHashed(hashed, idCol)._2
+    val reps = repsOfHashed(hashedOf(docs, idCol, textCol, k), idCol)._2
       .filter(col(idCol).isNotNull)
-    val banded = reps
-      .withColumn("_sig", minhashSignature(col("sh"), numHashes))
-      .select(col(idCol), col("sh"),
-        explode(bandKeys(col("_sig"), bands, rpb)).as("bb"))
-      .select(col(idCol), col("sh"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    val banded = bandsOf(reps.withColumn("_sig", minhashSignature(col("sh"), numHashes)),
+      Seq(idCol, "sh"), numHashes, bands)
     // min-id representative per (band, bucket): the one candidate each
     // member verifies against
     val bucketReps = banded.groupBy(col("band"), col("bucket"))
@@ -528,6 +548,21 @@ object TextDedup {
     val survivors = reps.select(col(idCol)).join(repLosers, Seq(idCol), "left_anti")
     docs.join(survivors, Seq(idCol), "left_semi")
   }
+
+  /** Index gate: `docs` minus the ids `dropped` derives from the
+    * bucket collisions, `docBuckets` joined (`joinType`) with the
+    * stored `index` on (band, bucket). */
+  private def indexGate(
+      docs: DataFrame,
+      docBuckets: DataFrame,
+      index: DataFrame,
+      joinType: String,
+      idCol: String,
+  )(dropped: DataFrame => DataFrame): DataFrame =
+    docs.join(
+      dropped(docBuckets.join(index, Seq("band", "bucket"), joinType))
+        .select(col(idCol)).distinct(),
+      Seq(idCol), "left_anti")
 
   /** Drop every document whose buckets collide with the base: the
     * (band, bucket) admission gate shared by the batch incremental
@@ -547,12 +582,28 @@ object TextDedup {
       docBuckets: DataFrame,
       baseBuckets: DataFrame,
       idCol: String,
-  ): DataFrame = {
-    val collided = docBuckets
-      .join(baseBuckets.select(col("band"), col("bucket")), Seq("band", "bucket"), "left_semi")
-      .select(col(idCol)).distinct()
-    docs.join(collided, Seq(idCol), "left_anti")
-  }
+  ): DataFrame =
+    indexGate(docs, docBuckets, baseBuckets.select(col("band"), col("bucket")), "left_semi",
+      idCol)(identity)
+
+  /** The verified gates' body: a collision with a base document drops
+    * only when the `jaccard` of `doc` (idCol, set) and `base`
+    * (_base_id, set) reaches `threshold`. */
+  private def verifiedGate(
+      docs: DataFrame,
+      docBuckets: DataFrame,
+      baseBuckets: DataFrame,
+      idCol: String,
+      threshold: Double,
+      doc: DataFrame,
+      base: DataFrame,
+  )(jaccard: (Column, Column) => Column): DataFrame =
+    indexGate(docs, docBuckets,
+      baseBuckets.select(col("band"), col("bucket"), col(idCol).as("_base_id")), "inner",
+      idCol) { hits =>
+      pairJaccard(hits.select(col(idCol), col("_base_id")).distinct(), doc, base)(jaccard)
+        .filter(col("jaccard") >= threshold)
+    }
 
   /** JACCARD-VERIFIED admission gate — the [[collisionGate]] upgraded
     * from "drop on any bucket collision" to "drop only when exact
@@ -583,19 +634,10 @@ object TextDedup {
       baseShingles: DataFrame,
       idCol: String,
       threshold: Double,
-  ): DataFrame = {
-    val cand = docBuckets
-      .join(baseBuckets.select(col("band"), col("bucket"), col(idCol).as("_base_id")),
-        Seq("band", "bucket"))
-      .select(col(idCol), col("_base_id")).distinct()
-    val dropped = cand
-      .join(docHashed.select(col(idCol), col("sh").as("_sh_new")), Seq(idCol))
-      .join(baseShingles.select(col(idCol).as("_base_id"), col("sh").as("_sh_base")),
-        Seq("_base_id"))
-      .filter(jaccardSorted(col("_sh_new"), col("_sh_base")) >= threshold)
-      .select(col(idCol)).distinct()
-    docs.join(dropped, Seq(idCol), "left_anti")
-  }
+  ): DataFrame =
+    verifiedGate(docs, docBuckets, baseBuckets, idCol, threshold,
+      docHashed.select(col(idCol), col("sh").as("_sh_new")),
+      baseShingles.select(col(idCol).as("_base_id"), col("sh").as("_sh_base")))(jaccardSorted)
 
   /** Hashed shingles packed to the 32-bit binary store form
     * ([[graft.functions.PackHashes32]]): 4 bytes per distinct shingle
@@ -624,21 +666,11 @@ object TextDedup {
       basePacked: DataFrame,
       idCol: String,
       threshold: Double,
-  ): DataFrame = {
-    val cand = docBuckets
-      .join(baseBuckets.select(col("band"), col("bucket"), col(idCol).as("_base_id")),
-        Seq("band", "bucket"))
-      .select(col(idCol), col("_base_id")).distinct()
-    val dropped = cand
-      .join(docHashed.select(col(idCol), packedShingles(col("sh")).as("_shp_new")),
-        Seq(idCol))
-      .join(basePacked.select(col(idCol).as("_base_id"), col("shp").as("_shp_base")),
-        Seq("_base_id"))
-      .filter(round(call_function("graft_jaccard_packed32",
-        col("_shp_new"), col("_shp_base")), 6) >= threshold)
-      .select(col(idCol)).distinct()
-    docs.join(dropped, Seq(idCol), "left_anti")
-  }
+  ): DataFrame =
+    verifiedGate(docs, docBuckets, baseBuckets, idCol, threshold,
+      docHashed.select(col(idCol), packedShingles(col("sh")).as("_shp_new")),
+      basePacked.select(col(idCol).as("_base_id"), col("shp").as("_shp_base")))(
+      (a, b) => round(call_function("graft_jaccard_packed32", a, b), 6))
 
   /** Incremental MinHash near-dup dedup: dedup a NEW batch against an
     * already-admitted corpus without reprocessing the corpus — the
@@ -728,14 +760,7 @@ object TextDedup {
     // shingle set — so the gate's buckets come from the cached rep
     // rows, bucket-for-bucket what minhashBuckets(local) derived from
     // raw text.
-    val hashed = CacheScope.cachedUntilAction(
-      withHashedShingles(batch, textCol, k, "sh")
-        .select(col(idCol), col("sh"), xxhash64(col("sh")).as("_fp")))
-    val reps = repsOfHashed(hashed, idCol)._2
-    val repLosers = nearDupPairsOfHashed(reps.select(col(idCol), col("sh")),
-        idCol, threshold, numHashes, bands, maxBucketSize)
-      .select(col("id_b").as(idCol))
-      .distinct()
+    val reps = repsOfHashed(hashedOf(batch, idCol, textCol, k), idCol)._2
     // surviving is consumed TWICE (the admission semi-join and the
     // survivor bucket derivation), and everything upstream of it —
     // the whole candidate-pair cascade: bucket explode, in-bucket pair
@@ -745,7 +770,8 @@ object TextDedup {
     // surviving representative dedups the cascade; action-scoped like
     // the sibling caches.
     val surviving = CacheScope.cachedUntilAction(reps.select(col(idCol), col("sh"))
-      .join(repLosers, Seq(idCol), "left_anti"))
+      .join(repLosers(reps, idCol, threshold, numHashes, bands, maxBucketSize),
+        Seq(idCol), "left_anti"))
     val local = batch.join(surviving.select(col(idCol)), Seq(idCol), "left_semi")
     (local, surviving)
   }

@@ -121,6 +121,21 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(seen == ref.size)
   }
 
+  test("LongLongMap: growing past the constructor's 2^30-slot bound fails loudly") {
+    // A 16-slot map whose bookkeeping says it is at the bound: the next
+    // new key crosses the grow threshold without allocating 2^30 slots.
+    val m = new LongLongMap(4)
+    def set(field: String, v: Int): Unit = {
+      val f = classOf[LongLongMap].getDeclaredField(field)
+      f.setAccessible(true)
+      f.setInt(m, v)
+    }
+    set("cap", 1 << 30)
+    set("n", ((1L << 30) * 3 / 5).toInt)
+    val e = intercept[IllegalArgumentException](m.put(1L, 1L))
+    assert(e.getMessage.contains(s"cannot grow past ${1 << 30} slots"), e.getMessage)
+  }
+
   test("driver gate boundary: quotient exactly at / just over the gate agree") {
     // a 12-vertex chain whose quotient has few rows: run components with
     // the gate sized to exactly the quotient row count (driver path) and

@@ -1,7 +1,8 @@
 package graft.quality
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{CacheManager, CachedData, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 import graft.SparkSpec
@@ -21,16 +22,20 @@ class CacheScopeSpec extends SparkSpec {
     ok
   }
 
-  private def cacheEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
-
-  test("cachedUntilAction: cache exists for the query, is gone after it completes") {
-    spark.catalog.clearCache()
-    val df = CacheScope.cachedUntilAction((1 to 100).toDF("n"))
-    assert(df.storageLevel != StorageLevel.NONE)
-    assert(df.count() == 100)
-    assert(eventually()(cacheEmpty),
-      "InMemoryRelation survived a completed query — the scoped release did not fire")
+  /** The plans of the session cache's entries (`cachedData` is
+    * private; reflect). */
+  private def cachedPlans: Seq[LogicalPlan] = {
+    val f = classOf[CacheManager].getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(spark.sharedState.cacheManager).asInstanceOf[Seq[CachedData]].map(_.plan)
   }
+
+  /** Every entry the session cache holds now was present in `before`.
+    * Compared by plan, not by entry: a release running late from an
+    * earlier suite can rebuild one of those entries, re-adding it after
+    * this case's `clearCache()`. */
+  private def noEntryBeyond(before: Seq[LogicalPlan]): Boolean =
+    cachedPlans.forall(p => before.exists(_.sameResult(p)))
 
   /** Records the session's completed queries. Registered AFTER the
     * scoped caches' release listeners, it is called after them for
@@ -43,13 +48,17 @@ class CacheScopeSpec extends SparkSpec {
       seen.add(qe): Unit
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
       seen.add(qe): Unit
+    /** Returns once the session's listeners have handled every one of
+      * `runs`' completions. */
+    def settle(runs: Seq[QueryExecution]): Unit =
+      assert(eventually()(runs.forall(seen.contains)),
+        "a completed query never reached the session's listeners")
     /** `df`'s row count as one action, returned once the session's
       * listeners have handled its completion. */
     def countSettled(df: DataFrame): Long = {
       val q = df.groupBy().count()
       val n = q.collect().head.getLong(0)
-      assert(eventually()(seen.contains(q.queryExecution)),
-        "a completed query never reached the session's listeners")
+      settle(Seq(q.queryExecution))
       n
     }
   }
@@ -62,6 +71,17 @@ class CacheScopeSpec extends SparkSpec {
 
   /** The session cache holds an entry for `df`'s plan. */
   private def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
+
+  test("cachedUntilAction: cache exists for the query, is gone after it completes") {
+    spark.catalog.clearCache()
+    val df = CacheScope.cachedUntilAction((1 to 100).toDF("n"))
+    assert(df.storageLevel != StorageLevel.NONE)
+    withProbe { probe =>
+      assert(probe.countSettled(df) == 100)
+      assert(!cached(df),
+        "InMemoryRelation survived a completed query — the scoped release did not fire")
+    }
+  }
 
   test("retainAcrossOwnAction: the cache survives the operator's own action, releases after the caller's") {
     spark.catalog.clearCache()
@@ -112,19 +132,24 @@ class CacheScopeSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    // 48 unrelated completions across 6 threads — racing the gate
-    // count AND the post-count idle window, under the reclaim bound
-    val noise = Future.sequence((1 to 6).map(_ => Future {
-      (1 to 8).foreach(_ => spark.range(50).count(): Unit)
-    }))
-    assert(df.count() == 1000) // the gate count, amid the noise — skipped
-    Await.result(noise, Duration.Inf)
-    Thread.sleep(700) // let the async bus drain every noise completion
-    assert(df.storageLevel != StorageLevel.NONE && !cacheEmpty,
-      "a concurrent unrelated completion released (or reclaimed) the retained cache")
-    assert(df.count() == 1000) // the caller's action — releases
-    assert(eventually()(cacheEmpty),
-      "InMemoryRelation survived the caller's completed query")
+    withProbe { probe =>
+      // 48 unrelated completions across 6 threads — racing the gate
+      // count AND the post-count idle window, under the reclaim bound
+      val noise = Future.sequence((1 to 6).map(_ => Future {
+        (1 to 8).map { _ =>
+          val q = spark.range(50).groupBy().count()
+          q.collect()
+          q.queryExecution
+        }
+      }))
+      assert(probe.countSettled(df) == 1000) // the gate count, amid the noise — skipped
+      // every noise completion has reached the release listeners
+      probe.settle(Await.result(noise, Duration.Inf).flatten)
+      assert(cached(df),
+        "a concurrent unrelated completion released (or reclaimed) the retained cache")
+      assert(probe.countSettled(df) == 1000) // the caller's action — releases
+      assert(!cached(df), "InMemoryRelation survived the caller's completed query")
+    }
   }
 
   test("cachedUntilAction: an already-cached plan is passed through, not double-cached or released") {
@@ -134,11 +159,12 @@ class CacheScopeSpec extends SparkSpec {
       outer.count()
       // same plan → storageLevel is already non-NONE → passthrough
       val inner: DataFrame = CacheScope.cachedUntilAction(outer)
-      inner.count()
-      // the outer owner's cache must survive inner's completed action
-      Thread.sleep(500)
-      assert(outer.storageLevel != StorageLevel.NONE,
-        "passthrough released a cache it does not own")
+      withProbe { probe =>
+        probe.countSettled(inner)
+        // the outer owner's cache must survive inner's completed action
+        assert(outer.storageLevel != StorageLevel.NONE,
+          "passthrough released a cache it does not own")
+      }
     } finally {
       outer.unpersist()
     }
@@ -150,6 +176,7 @@ class CacheScopeSpec extends SparkSpec {
       .invoke(spark.listenerManager).asInstanceOf[Array[_]].length
 
   test("abandoned frames are reclaimed: never-materialized scoped caches leave no listener or entry") {
+    val entriesBefore = cachedPlans
     spark.catalog.clearCache()
     val before = listenerCount
     // three frames the caller builds and then walks away from
@@ -161,7 +188,7 @@ class CacheScopeSpec extends SparkSpec {
     (1 to CacheScope.MaxUnconsumedCompletions + 2).foreach { _ =>
       spark.range(2).count(): Unit
     }
-    assert(eventually()(cacheEmpty),
+    assert(eventually()(noEntryBeyond(entriesBefore)),
       "abandoned scoped caches were never reclaimed")
     assert(eventually()(listenerCount <= before),
       "abandoned scoped caches leaked their QueryExecutionListeners")
@@ -169,17 +196,19 @@ class CacheScopeSpec extends SparkSpec {
 
   test("shared scope: cache survives across the block's actions, is released at block end") {
     spark.catalog.clearCache()
-    CacheScope.shared {
-      val df = CacheScope.cachedUntilAction((1 to 100).toDF("n"))
-      assert(df.count() == 100)
-      // first action completed; outside a shared block the listener
-      // would release here — inside, the cache must survive
-      Thread.sleep(500)
-      assert(df.storageLevel != StorageLevel.NONE,
-        "shared-scoped cache released after the first action, before block end")
-      assert(df.filter($"n" > 50).count() == 50)
+    var df: DataFrame = null
+    withProbe { probe =>
+      CacheScope.shared {
+        df = CacheScope.cachedUntilAction((1 to 100).toDF("n"))
+        assert(probe.countSettled(df) == 100)
+        // first action completed; outside a shared block the listener
+        // would release here — inside, the cache must survive
+        assert(df.storageLevel != StorageLevel.NONE,
+          "shared-scoped cache released after the first action, before block end")
+        assert(df.filter($"n" > 50).count() == 50)
+      }
     }
-    assert(eventually()(cacheEmpty),
+    assert(eventually()(!cached(df)),
       "shared-scoped cache survived the end of its block")
   }
 
@@ -191,20 +220,22 @@ class CacheScopeSpec extends SparkSpec {
     }
     // never materialized inside the block → handed the until-action
     // listener; the driver-run action consumes and releases it
-    assert(df.count() == 64)
-    assert(eventually()(cacheEmpty),
-      "construct-only shared cache survived its consuming action")
+    withProbe { probe =>
+      assert(probe.countSettled(df) == 64)
+      assert(!cached(df), "construct-only shared cache survived its consuming action")
+    }
   }
 
   test("operator caches are action-scoped: no InMemoryRelation survives a completed minhash/bm25 query") {
+    val before = cachedPlans
     spark.catalog.clearCache()
     val docs = (0 until 50)
       .map(i => (i.toLong, s"alpha beta gamma delta epsilon token$i"))
       .toDF("doc_id", "text")
     TextDedup.minhashDedup(docs, "doc_id", "text", threshold = 0.8).count()
-    assert(eventually()(cacheEmpty), "minhashDedup leaked its hashed-shingle cache")
+    assert(eventually()(noEntryBeyond(before)), "minhashDedup leaked its hashed-shingle cache")
     val queries = Seq((900L, "alpha beta")).toDF("qid", "qtext")
     graft.text.Bm25.bm25TopK(docs, "doc_id", "text", queries, "qid", "qtext", k = 5).count()
-    assert(eventually()(cacheEmpty), "bm25TopK leaked its postings cache")
+    assert(eventually()(noEntryBeyond(before)), "bm25TopK leaked its postings cache")
   }
 }

@@ -276,6 +276,47 @@ class TextDedupSpec extends SparkSpec {
     assert(capped >= n / 2L, s"rep pairs should cover most docs, got $capped")
   }
 
+  test("one LSH core: the MinHash entry points agree on identical-set groups and an oversized bucket") {
+    // 40 boilerplate docs fill one bucket per band, over the cap of 8;
+    // ids 100+ repeat six of them (identical word sets after case and
+    // whitespace normalization); 200/201 are an identical pair; the
+    // 4xx family shares 10 of 16 words (jaccard 0.625: candidates that
+    // verify below the threshold); 3xx are unrelated.
+    val blob = boilerplateDocs(40).as[(Long, String)].collect().toSeq
+    val family = (0 until 8).map(i => (400L + i, (0 until 10).map(w => s"v$w").mkString(" ") +
+      s" x$i y$i z$i"))
+    val corpus = (blob ++ blob.take(6).map { case (i, t) => (100L + i, t.toUpperCase + "  ") } ++
+      family ++ Seq(
+        (200L, "an unrelated identical pair"), (201L, "An  unrelated identical PAIR"),
+        (301L, "kilo lima mike november oscar"), (303L, "papa quebec romeo sierra tango"),
+        (305L, "uniform victor whiskey xray yankee"))).toDF("doc_id", "text")
+    val (threshold, k, h, b, cap) = (0.9, 1, 30, 6, 8)
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("doc_id").as[Long].collect().toSet
+
+    val dedup = ids(TextDedup.minhashDedup(corpus, "doc_id", "text", threshold, k, h, b, cap))
+    val losers = TextDedup
+      .minhashNearDupPairs(corpus, "doc_id", "text", threshold, k, h, b, cap)
+      .select("id_b").distinct().as[Long].collect().toSet
+    assert(dedup == ids(corpus) -- losers)
+    assert(dedup.contains(0L) && !dedup.contains(1L) && !dedup.contains(100L))
+    assert(family.forall { case (i, _) => dedup.contains(i) })
+
+    val (local, _) = TextDedup.minhashDedupHashed(corpus, "doc_id", "text", threshold, k, h, b, cap)
+    assert(ids(local) == dedup)
+
+    val base = corpus.filter(col("doc_id") % 2 === 0)
+    val batch = corpus.filter(col("doc_id") % 2 =!= 0)
+    val fromText = ids(TextDedup
+      .minhashDedupAgainstBase(batch, base, "doc_id", "text", threshold, k, h, b, cap))
+    val stored = TextDedup.minhashBuckets(base, "doc_id", "text", k, h, b)
+      .select("band", "bucket").distinct()
+    val fromIndex = ids(TextDedup
+      .minhashDedupAgainstBaseBuckets(batch, stored, "doc_id", "text", threshold, k, h, b, cap))
+    assert(fromIndex == fromText)
+    assert(Set(301L, 303L, 305L).subsetOf(fromIndex) && !fromIndex.contains(1L))
+  }
+
   test("hot-bucket telemetry: oversized buckets are observed and counted, never silent") {
     graft.quality.SkewTelemetry.reset()
     TextDedup
