@@ -994,9 +994,13 @@ case class EvalBarrier(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Canonical pattern strings for [[TextStats]] — single source of
-  * truth shared with [[graft.text.TextAnalysis]] (whose oracle SQL
-  * mirrors them): change one and the other moves with it. */
+/** Canonical pattern strings for [[TextStats]], shared with
+  * [[graft.text.TextAnalysis]]; the oracle SQL (`CurationQueries`,
+  * `TextQueries`) replays the same patterns in DuckDB. The kernel runs
+  * none of them as a regex: [[MarkerTable]] parses each marker pattern
+  * into its word list at init and fails loudly if one leaves the
+  * `(?i)\b(w1|…|wn)\b` form, and the punct byte class is read off
+  * [[PunctPattern]]. */
 object GraftTextPatterns {
   val LangMarkers: Seq[(String, String)] = Seq(
     "en" -> "(?i)\\b(the|and|of|to|in|is|that|with|for|was)\\b",
@@ -1006,27 +1010,90 @@ object GraftTextPatterns {
   )
   val ZhPattern = "[\\u4e00-\\u9fff]"
   val PunctPattern = "[\\p{Punct}]"
+}
 
-  private[functions] val Compiled: Array[java.util.regex.Pattern] =
-    (LangMarkers.map(_._2) ++ Seq(ZhPattern, PunctPattern))
-      .map(java.util.regex.Pattern.compile).toArray
+/** The marker words of a `LangMarkers` list as an open-addressing
+  * table from a packed word to the bitmask of its languages (bit i =
+  * the i-th pattern). A word packs into a Long one byte per 8 bits
+  * ([[MarkerTable.pack]]), so it holds at most 8 bytes; its bytes are
+  * nonzero, so key 0 marks an empty slot, whose mask is 0.
+  * `minLen`/`maxLen` bound the word lengths, so a scanner looks up
+  * only runs that can hit. */
+private[functions] final class MarkerTable private (
+    keys: Array[Long], masks: Array[Int], val minLen: Int, val maxLen: Int) {
+
+  /** The language bitmask of a packed lowercase word, 0 if none. */
+  def lookup(key: Long): Int = masks(MarkerTable.slot(keys, key))
+}
+
+private[functions] object MarkerTable {
+  private val Form = """\(\?i\)\\b\(([a-z]+(?:\|[a-z]+)*)\)\\b""".r
+
+  def pack(word: String): Long = word.foldLeft(0L)((k, c) => (k << 8) | c)
+
+  /** The slot holding `key`, or the empty slot where it would go. */
+  private def slot(keys: Array[Long], key: Long): Int = {
+    var i = ((key * 0x9E3779B97F4A7C15L) >>> (64 - Integer.numberOfTrailingZeros(keys.length))).toInt
+    while (keys(i) != 0L && keys(i) != key) i = (i + 1) & (keys.length - 1)
+    i
+  }
+
+  def apply(markers: Seq[(String, String)]): MarkerTable = {
+    require(markers.nonEmpty && markers.size <= 32,
+      s"marker table needs 1 to 32 languages, got ${markers.size}")
+    val words = markers.zipWithIndex.flatMap { case ((lang, pattern), i) =>
+      val alts = pattern match {
+        case Form(alts) => alts.split('|').toSeq
+        case _ => throw new IllegalArgumentException(
+          s"marker pattern of '$lang' must have the form (?i)\\b(w1|…|wn)\\b " +
+            s"with [a-z]+ words, got: $pattern")
+      }
+      alts.map { w =>
+        require(w.length <= 8, s"marker word '$w' of '$lang' is longer than the 8-byte key")
+        w -> (1 << i)
+      }
+    }.groupMapReduce(_._1)(_._2)(_ | _)
+    val size = Integer.highestOneBit(math.max(16, words.size * 4) - 1) << 1
+    val keys = new Array[Long](size)
+    val masks = new Array[Int](size)
+    words.foreach { case (w, mask) =>
+      val i = slot(keys, pack(w))
+      keys(i) = pack(w)
+      masks(i) = mask
+    }
+    new MarkerTable(keys, masks, words.keys.map(_.length).min, words.keys.map(_.length).max)
+  }
 }
 
 /** text_stats(text) → struct<n_chars, n_tokens, tok_chars, punct, zh,
   * en, de, fr, es>: every scalar the cheap text annotators (language
-  * id, quality score, token stats) consume, in ONE kernel pass — one
-  * String conversion and count-only java.util.regex loops (the same
-  * engine `regexp_extract_all` uses, so counts are bit-identical)
-  * instead of one conversion + a materialized match ARRAY per helper
-  * per row, plus one raw-byte whitespace tokenize (≡ the
-  * `split(trim(x), "\\s+")` boundaries — the [[Tokenize]] byte-class
-  * argument — WITHOUT lowercasing, so per-token char counts equal
-  * `length()` of the raw split tokens). The downstream annotators are
-  * plain arithmetic over the struct. Participates in whole-stage
-  * codegen (one static-call doGenCode, the [[CosineSimilarity]]
-  * pattern), so an annotator Project stays one starred codegen span
-  * and WSCG subexpression elimination shares ONE kernel evaluation
-  * per row across every annotator in the projection. */
+  * id, quality score, token stats) consume, in ONE pass over the UTF-8
+  * bytes — no String conversion and no regex. Per field:
+  *   - n_chars: `UTF8String.numChars` (step by each lead byte's length);
+  *   - n_tokens, tok_chars: the raw-byte whitespace tokenize (≡ the
+  *     `split(trim(x), "\\s+")` boundaries — the [[Tokenize]] byte-class
+  *     argument — WITHOUT lowercasing, so per-token char counts equal
+  *     `length()` of the raw split tokens);
+  *   - punct: ASCII bytes in POSIX `[:punct:]` (`\p{Punct}`, 32 chars;
+  *     `_` counts although it is also a word byte);
+  *   - zh: 3-byte sequences that decode to U+4E00–U+9FFF;
+  *   - en/de/fr/es: maximal runs of word bytes `[A-Za-z0-9_]` whose
+  *     ASCII lowercase is in that language's [[GraftTextPatterns]]
+  *     word list. Every byte ≥ 0x80 is a non-word byte, so a marker
+  *     word next to a non-ASCII letter, digit or combining mark counts:
+  *     the ASCII word boundary of RE2 (the DuckDB oracle) and of
+  *     java.util.regex from JDK 19 on, where JDK 17's `\b` is Unicode-
+  *     aware. Case folding is ASCII-only: `ſ` and `K` (U+212A) stay
+  *     non-word bytes, where RE2's `(?i)` folds them to `s` and `k`.
+  * On every input where no marker word touches a non-ASCII letter,
+  * digit or combining mark, the counts equal the `(?i)\b(…)\b` regex
+  * loops this kernel replaced (TextStatsSpec). The downstream
+  * annotators are plain arithmetic over the struct. Participates in
+  * whole-stage codegen (one static-call doGenCode, the
+  * [[CosineSimilarity]] pattern), so an annotator Project stays one
+  * starred codegen span and WSCG subexpression elimination shares ONE
+  * kernel evaluation per row across every annotator in the
+  * projection. */
 case class TextStats(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
 
@@ -1054,87 +1121,91 @@ case class TextStats(child: Expression)
 }
 
 object TextStats {
-  /** Shared by interpreted eval and generated code. */
-  def compute(u: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val s = u.toString
-    // count-only regex loops (en, de, fr, es, zh, punct)
-    val c = new Array[Int](GraftTextPatterns.Compiled.length)
-    var i = 0
-    while (i < c.length) {
-      val m = GraftTextPatterns.Compiled(i).matcher(s)
-      var k = 0
-      while (m.find()) k += 1
-      c(i) = k
-      i += 1
+  private val Markers = MarkerTable(GraftTextPatterns.LangMarkers)
+  require(GraftTextPatterns.LangMarkers.map(_._1) == Seq("en", "de", "fr", "es"),
+    "LangMarkers must list the struct's marker fields en, de, fr, es in order")
+
+  private final val Word = 1
+  private final val Punct = 2
+  private final val Ws = 4
+
+  /** Class bits per byte value: Word `[A-Za-z0-9_]`, Punct
+    * [[GraftTextPatterns.PunctPattern]] (ASCII only), Ws the java-`\s`
+    * bytes of [[Tokenize.isWs]]. Bytes ≥ 0x80 have no class. */
+  private val Cls: Array[Byte] = {
+    val punct = GraftTextPatterns.PunctPattern.r
+    Array.tabulate(256) { i =>
+      val c = i.toChar
+      val ascii = i < 0x80
+      ((if (ascii && (c.isLetterOrDigit || c == '_')) Word else 0) |
+        (if (ascii && punct.matches(c.toString)) Punct else 0) |
+        (if (Tokenize.isWs(i.toByte)) Ws else 0)).toByte
     }
-    // raw-byte tokenize: java-\s is ASCII-only, multibyte UTF-8 units
-    // never collide with ASCII bytes; char count = non-continuation
-    // bytes
-    val bytes = u.getBytes
-    val n = bytes.length
-    var nTokens = 0
-    var tokChars = 0L
-    var p = 0
-    while (p < n) {
-      while (p < n && Tokenize.isWs(bytes(p))) p += 1
-      if (p < n) {
-        nTokens += 1
-        while (p < n && !Tokenize.isWs(bytes(p))) {
-          if ((bytes(p) & 0xC0) != 0x80) tokChars += 1
-          p += 1
-        }
-      }
-    }
-    org.apache.spark.sql.catalyst.InternalRow(
-      u.numChars(), nTokens, tokChars, c(5), c(4), c(0), c(1), c(2), c(3))
   }
-}
 
-/** token_stats(text) → struct<n_chars, n_tokens, tok_chars>: the
-  * tokenizer-only subset of [[TextStats]] — for annotators that need
-  * counts and lengths but NO regex-marker counts (token stats,
-  * budget packing), which would otherwise pay six wasted regex scans
-  * per row. Same raw-byte tokenize, bit-identical fields. Codegen'd
-  * like [[TextStats]]. */
-case class TokenStats(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_chars", IntegerType, nullable = false),
-    StructField("n_tokens", IntegerType, nullable = false),
-    StructField("tok_chars", LongType, nullable = false)))
-  override def prettyName: String = "graft_token_stats"
-
-  override def nullSafeEval(t: Any): Any =
-    TokenStats.compute(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenStats.compute($c);")
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-object TokenStats {
   /** Shared by interpreted eval and generated code. */
   def compute(u: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = u.getBytes
     val n = bytes.length
+    val markers = Markers
+    val minLen = markers.minLen
+    val maxLen = markers.maxLen
+    val hits = new Array[Int](4)
+    var nChars = 0
+    var charStart = 0
     var nTokens = 0
     var tokChars = 0L
+    var inTok = false
+    var punct = 0
+    var zh = 0
+    var run = 0 // length of the current word run
+    var key = 0L // its first maxLen bytes, lowercased and packed
     var p = 0
     while (p < n) {
-      while (p < n && Tokenize.isWs(bytes(p))) p += 1
-      if (p < n) {
-        nTokens += 1
-        while (p < n && !Tokenize.isWs(bytes(p))) {
-          if ((bytes(p) & 0xC0) != 0x80) tokChars += 1
-          p += 1
+      val b = bytes(p)
+      val cls = Cls(b & 0xFF)
+      if (p == charStart) {
+        nChars += 1
+        charStart += UTF8String.numBytesForFirstByte(b)
+      }
+      if ((cls & Ws) != 0) inTok = false
+      else {
+        if (!inTok) { nTokens += 1; inTok = true }
+        if ((b & 0xC0) != 0x80) tokChars += 1
+      }
+      if ((cls & Punct) != 0) punct += 1
+      if ((cls & Word) != 0) {
+        // `| 0x20` lowercases A-Z and leaves digits; `_` becomes 0x7F,
+        // which no marker word contains
+        if (run < maxLen) key = (key << 8) | (b | 0x20)
+        run += 1
+      } else {
+        if (run >= minLen && run <= maxLen) addHits(hits, markers.lookup(key))
+        run = 0
+        key = 0L
+        val lead = b & 0xFF
+        if (lead >= 0xE4 && lead <= 0xE9 && p + 2 < n) {
+          val b1 = bytes(p + 1)
+          val b2 = bytes(p + 2)
+          if ((b1 & 0xC0) == 0x80 && (b2 & 0xC0) == 0x80) {
+            val cp = ((lead & 0x0F) << 12) | ((b1 & 0x3F) << 6) | (b2 & 0x3F)
+            if (cp >= 0x4E00 && cp <= 0x9FFF) zh += 1
+          }
         }
       }
+      p += 1
     }
-    org.apache.spark.sql.catalyst.InternalRow(u.numChars(), nTokens, tokChars)
+    if (run >= minLen && run <= maxLen) addHits(hits, markers.lookup(key))
+    org.apache.spark.sql.catalyst.InternalRow(
+      nChars, nTokens, tokChars, punct, zh, hits(0), hits(1), hits(2), hits(3))
+  }
+
+  private def addHits(hits: Array[Int], mask: Int): Unit = {
+    var m = mask
+    while (m != 0) {
+      hits(Integer.numberOfTrailingZeros(m)) += 1
+      m &= m - 1
+    }
   }
 }
 
@@ -1355,8 +1426,6 @@ object GraftFunctions {
       args => TokenTf(args(0))),
     desc("graft_text_stats", "char/token/punct/lang-marker counts of text in one pass",
       args => TextStats(args(0))),
-    desc("graft_token_stats", "char/token/token-char counts of text (no regex markers)",
-      args => TokenStats(args(0))),
     desc("graft_ngrams", "non-distinct unigrams then adjacent bigrams of normalized text",
       args => Ngrams(args(0))),
     desc("graft_eval_once", "identity optimizer barrier: the child is evaluated exactly once per row",

@@ -43,10 +43,11 @@ object Curation {
     * struct column pinned behind the `graft_eval_once` optimizer
     * barrier: the downstream [[keep]] filter is pushed down BY
     * Catalyst onto these columns, and without the barrier the whole
-    * stats kernel (six regex scans + tokenize) inlines into every
-    * filter conjunct and every consumer projection — whole-stage
-    * codegen does no subexpression elimination in Filter nodes, and
-    * the measured cost was 2.8–5.8× on tp1/tp2/tp12 (r17 A/B). With
+    * stats kernel (one byte scan of the text per evaluation) inlines
+    * into every filter conjunct and every consumer projection —
+    * whole-stage codegen does no subexpression elimination in Filter
+    * nodes, and the measured cost was 2.8–5.8× on tp1/tp2/tp12 (r17
+    * A/B, with the regex kernel this scan replaced). With
     * the barrier, the kernel provably runs once per row and
     * curation_tokens rides the same struct (bit-identical n_tokens
     * field) instead of paying a second tokenizer kernel. */

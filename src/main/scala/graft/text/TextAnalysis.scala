@@ -20,12 +20,12 @@ object TextAnalysis {
       .otherwise(split(trim(text), "\\s+"))
 
   /** The fused per-row stats struct (`graft_text_stats`): char/token/
-    * punct/lang-marker counts in one kernel pass. Every count-shaped
-    * annotator below is arithmetic over this ONE expression, and
-    * codegen subexpression elimination shares a single evaluation
-    * when several annotators sit in one projection (the curation
-    * annotate chain previously paid one String conversion + one
-    * materialized regex match ARRAY per helper per row). */
+    * punct/zh/lang-marker counts in one pass over the UTF-8 bytes (no
+    * String conversion, no regex; [[graft.functions.TextStats]] defines
+    * each field). Every count-shaped annotator below, the token count
+    * and mean word length included, is arithmetic over this ONE
+    * expression, and codegen subexpression elimination shares a single
+    * evaluation when several annotators sit in one projection. */
   private def statsOf(text: Column): Column =
     call_function("graft_text_stats", coalesce(text, lit("")))
 
@@ -40,13 +40,7 @@ object TextAnalysis {
   def sharedStats(text: Column): Column =
     call_function("graft_eval_once", statsOf(text))
 
-  /** Tokenizer-only stats (no regex-marker counts) — for annotators
-    * that need counts/lengths alone; the full statsOf would pay six
-    * wasted regex scans per row (measured +0.4 s on t1). */
-  private def tokStatsOf(text: Column): Column =
-    call_function("graft_token_stats", coalesce(text, lit("")))
-
-  def tokenCount(text: Column): Column = tokStatsOf(text).getField("n_tokens")
+  def tokenCount(text: Column): Column = statsOf(text).getField("n_tokens")
 
   /** The `tokens(normalized(text))` idiom as ONE kernel call
     * (`graft_tokens`): lowercase + java-\s byte split in a single
@@ -69,7 +63,8 @@ object TextAnalysis {
 
   // -------------------------------------------------------------------
   // Language ID: stopword-hit heuristic. Deterministic and
-  // SQL-mirrorable (same regex counts run in any engine). Real
+  // SQL-mirrorable (the marker patterns replay as regex counts in any
+  // engine with an ASCII `\b`). Real
   // pipelines plug a model here; the operator shape (score-per-lang →
   // argmax) is what matters.
   // -------------------------------------------------------------------
@@ -86,9 +81,11 @@ object TextAnalysis {
     * lexicographically LARGEST language code on a score tie (zh > fr >
     * es > en > de) — the t2 oracle's CASE chain mirrors exactly this
     * order, so any change here (or a new language) must be mirrored
-    * there. Counts come from the fused stats kernel (same
-    * java.util.regex engine and patterns as the old per-marker
-    * regexp_extract_all chain — bit-identical counts, one text pass). */
+    * there. Counts come from the fused stats kernel's byte scan: a
+    * marker hit is a maximal `[A-Za-z0-9_]` run whose ASCII lowercase
+    * is in the language's list — the ASCII `\b` of RE2, so the
+    * oracle's `regexp_extract_all` over the same patterns agrees; case
+    * folding is ASCII-only. */
   def langId(text: Column): Column = langIdOfStats(statsOf(text))
 
   /** [[langId]] over an already-computed stats struct (a
@@ -110,7 +107,7 @@ object TextAnalysis {
   def stopwordCount(text: Column): Column = statsOf(text).getField("en")
 
   def meanWordLength(text: Column): Column = {
-    val st = tokStatsOf(text)
+    val st = statsOf(text)
     val n = st.getField("n_tokens")
     when(n === 0, lit(0.0))
       .otherwise(st.getField("tok_chars").cast("double") / n)

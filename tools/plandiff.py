@@ -17,6 +17,9 @@ placeholders:
     edit above the call site moves the line, not the plan)
   - lambda identity hashes (`Foo$$$Lambda$5812/0x00007f...@307b954`,
     `Foo$$Lambda/0x00007f...@307b954`) -> `$Lambda`
+  - lambda variable names (`lambda x_49`) -> `lambda x_N`; Spark
+    numbers them from one JVM-wide counter, and two PlanDump runs of
+    the same commit number the vector-search plans differently
   - /tmp paths (`file:/tmp/graft-i8114.../meta`) -> `/tmp/...`
 
 Prints a unified diff for every query whose normalized plans differ
@@ -34,6 +37,7 @@ NORMALIZE = [
     (re.compile(r"RDD\[\d+\]( at \w+ at [\w.]+\.scala:)\d+"), r"RDD[N]\1L"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\$Lambda[$\d]*/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda"),
+    (re.compile(r"\blambda (\w+?)_\d+"), r"lambda \1_N"),
     (re.compile(r"/tmp/[^\s,\]\)]*"), "/tmp/..."),
 ]
 
