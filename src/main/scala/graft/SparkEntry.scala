@@ -64,7 +64,8 @@ object SparkEntry {
     * write-through — re-trained and re-written on every call — but
     * [[graft.sim.IvfIndex.ensure]] and
     * [[graft.text.BucketIndex.ensure]] deliberately skip a rebuild
-    * when the published meta row still matches (the M2
+    * while their meta file still matches (version, params, base
+    * fingerprint — [[graft.warehouse.PersistedIndex]], the M2
     * refresh-cadence contract). That is correct for a long-lived
     * session and WRONG for a measurement contract that requires each
     * bench/verify invocation to compute from the inputs: Bench and

@@ -1,8 +1,10 @@
 package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 import graft.views.Refresh
+import graft.warehouse.PersistedIndex
 
 /** Persisted, refresh-maintained LSH (band, bucket) index over an
   * already-admitted BASE corpus — the [[graft.sim.IvfIndex]] pattern
@@ -16,11 +18,9 @@ import graft.views.Refresh
   *     [[TextDedup.minhashBuckets]] over the base — byte-identical to
   *     the per-call derivation, so the gate's drop set is unchanged;
   *   - published through the M2 atomic swap
-  *     ([[graft.views.Refresh.refreshView]]) with a one-row meta table
-  *     written LAST as the validity marker: [[ensure]] rebuilds when
-  *     the meta row is missing or disagrees with (version, shingle k,
-  *     numHashes, bands, base row count) — a crash mid-build or a base
-  *     change can never serve a stale index silently;
+  *     ([[graft.views.Refresh.refreshView]]) and kept valid by
+  *     [[graft.warehouse.PersistedIndex]]: a crash mid-build or a base
+  *     rewrite (even one keeping the row count) never serves stale;
   *   - at 100 TB the build is a scheduled refresh job (one
   *     shingle+signature pass over the base, amortized across every
   *     batch admitted between refreshes — in steady state the
@@ -41,20 +41,20 @@ object BucketIndex {
     * index from an older version never serves. */
   val Version = 1
 
+  /** The published table's schema, known up front so reading it runs
+    * no schema-inference job. */
+  val BucketsSchema: StructType =
+    new StructType().add("band", IntegerType).add("bucket", LongType)
+
   final case class Handle(warehouse: String, name: String) {
     def bucketsPath: String = Refresh.viewPath(warehouse, s"${name}_buckets")
     def metaPath: String = Refresh.viewPath(warehouse, s"${name}_meta")
   }
 
-  // One monitor per index root: concurrent queries sharing an index
-  // (Verify runs the map concurrently) build it exactly once.
-  private val buildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** Return a handle to a valid bucket index for (base, params),
-    * building it if absent or stale. Staleness = meta row missing, or
-    * any of (version, k, numHashes, bands, base row count) changed —
-    * the same cheap drift detector as [[graft.sim.IvfIndex]]. */
+    * building it if absent or stale. Staleness = meta missing, or any
+    * of (version, k, numHashes, bands, base fingerprint over the id and
+    * text columns) changed — see [[graft.warehouse.PersistedIndex]]. */
   def ensure(
       spark: SparkSession,
       warehouse: String,
@@ -67,65 +67,17 @@ object BucketIndex {
       bands: Int,
   ): Handle = {
     val h = Handle(warehouse, name)
-    val lock = buildLocks.computeIfAbsent(h.metaPath, _ => new Object)
-    lock.synchronized {
-      val n = base.count()
-      readMeta(spark, h) match {
-        case Some(m)
-            if m.get("version").contains(Version.toLong) &&
-              m.get("n").contains(n) &&
-              m.get("k").contains(k.toLong) &&
-              m.get("num_hashes").contains(numHashes.toLong) &&
-              m.get("bands").contains(bands.toLong) => h
-        case _ => build(spark, h, base, idCol, textCol, k, numHashes, bands, n)
-      }
+    PersistedIndex.ensure(spark, h.metaPath, Version,
+      Seq("k" -> k, "num_hashes" -> numHashes, "bands" -> bands), base, Seq(idCol, textCol)) { _ =>
+      Refresh.refreshView(spark, warehouse, Refresh.ViewJob(s"${name}_buckets",
+        _ => TextDedup.minhashBuckets(base, idCol, textCol, k, numHashes, bands)
+          .select("band", "bucket").distinct()))
+      Nil
     }
-  }
-
-  private def readMeta(spark: SparkSession, h: Handle): Option[Map[String, Long]] = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(h.metaPath))) None
-    else {
-      val rows = spark.read.parquet(h.metaPath).collect()
-      if (rows.length != 1) None
-      else {
-        val r = rows(0)
-        Some(r.schema.fieldNames.map(f => f -> r.getAs[Long](f)).toMap)
-      }
-    }
-  }
-
-  private def build(
-      spark: SparkSession,
-      h: Handle,
-      base: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      numHashes: Int,
-      bands: Int,
-      n: Long,
-  ): Handle = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    // Invalidate FIRST: a crash anywhere below leaves no meta row, so
-    // the next ensure() rebuilds instead of serving a torn index.
-    fs.delete(new org.apache.hadoop.fs.Path(h.metaPath), true)
-
-    Refresh.refreshView(spark, h.warehouse, Refresh.ViewJob(s"${h.name}_buckets",
-      _ => TextDedup.minhashBuckets(base, idCol, textCol, k, numHashes, bands)
-        .select("band", "bucket").distinct()))
-
-    // Meta LAST: its presence (and agreement) is the validity marker.
-    val meta = Seq((Version.toLong, n, k.toLong, numHashes.toLong, bands.toLong))
-    Refresh.refreshView(spark, h.warehouse, Refresh.ViewJob(s"${h.name}_meta",
-      s => s.createDataFrame(meta)
-        .toDF("version", "n", "k", "num_hashes", "bands").repartition(1)))
     h
   }
 
   /** The published slim (band, bucket) table. */
   def buckets(spark: SparkSession, h: Handle): DataFrame =
-    spark.read.parquet(h.bucketsPath)
+    spark.read.schema(BucketsSchema).parquet(h.bucketsPath)
 }
