@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-
-import scala.util.control.NonFatal
 
 /** ANN quality-vs-cost sweep — the accuracy side of the tradeoff the
   * sf1/sf10 exponents only half-describe. A measured exponent says an
@@ -47,17 +44,7 @@ object AnnRecallBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1")
     val reps = sys.env.get("SPARK_GRAFT_ANN_REPS").map(_.toInt).getOrElse(3)
-    val cpus = Defaults.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Defaults.sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val nVecs = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
@@ -77,23 +64,7 @@ object AnnRecallBench {
     def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     def f4(v: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, v)
 
-    def timeOnce(name: String): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-          true
-        } catch {
-          case NonFatal(e) =>
-            System.err.println(
-              s"[annbench] $name FAILED: ${e.toString.linesIterator.next().take(200)}")
-            false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      if (ok) Some(sec) else None
-    }
+    def timeOnce(name: String): Option[Double] = Profile.noopRun(spark, sfDir, name, "annbench")
 
     var v1Sec = Double.NaN
     val blocks = methods.flatMap { name =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark harness with an interleaved-round methodology.
@@ -119,7 +118,6 @@ object Bench {
     // happens in THIS run's untimed warm-up (the t30 session-refresh
     // pattern), so the timed rounds measure the serve path either way
     SparkEntry.purgePersistedIndexes(sfDir)
-    val cpus = Defaults.cpus
     // the shared profile (graft.Defaults.sessionBuilder) carries the
     // decade-heap liveness timeouts since r16 — every entrypoint and
     // user session inherits them, not just the bench
@@ -181,33 +179,12 @@ object Bench {
           s"(exact references for the LSH/banded/ANN scale paths; " +
           s"quadratic by definition)")
 
-    // Returns whether the query RAN: a failed execution (OOM,
-    // transient task failure) must not be timed — the observed failure
-    // mode is a round where every query dies in milliseconds, which
-    // would otherwise hand min-across-rounds a fleet of bogus ~0 s
-    // samples and silently halve the headline.
-    def runOnce(name: String): Boolean = {
-      // noop sink, NOT count(): count() lets Catalyst prune every
-      // projected expression, so a projection-only query would "time"
-      // nothing but the scan — the noop write evaluates every output
-      // column (same work Verify's parquet dump measures) without I/O.
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-          true
-        } catch {
-          case NonFatal(e) =>
-            System.err.println(
-              s"[bench] $name FAILED: ${e.toString.linesIterator.next().take(200)}")
-            false
-        }
-      // Operators may cache multi-consumer intermediates internally;
-      // drop them between queries so one query's working set never
-      // lands on another's measurement.
-      spark.catalog.clearCache()
-      ok
-    }
+    // The query's wall seconds, None when it failed: a failed
+    // execution (OOM, transient task failure) must not be timed — the
+    // observed failure mode is a round where every query dies in
+    // milliseconds, which would otherwise hand min-across-rounds a
+    // fleet of bogus ~0 s samples and silently halve the headline.
+    def runOnce(name: String): Option[Double] = Profile.noopRun(spark, sfDir, name, "bench")
 
     // Phase 1 — JIT/codegen warm-up at the smallest scale factor:
     // first executions in a fresh JVM pay interpreted-Catalyst +
@@ -265,11 +242,8 @@ object Bench {
     // blind window after the per-round write-ahead below; at r14's
     // degraded-host warm-up cost that window was ~35 min wide).
     val warm0 = System.nanoTime()
-    val warmPass: Map[String, Double] = order.flatMap { name =>
-      val t0 = System.nanoTime()
-      val ok = runOnce(name)
-      if (ok) Some(name -> (System.nanoTime() - t0) / 1e9) else None
-    }.toMap
+    val warmPass: Map[String, Double] =
+      order.flatMap(name => runOnce(name).map(name -> _)).toMap
     val warmPassSec = (System.nanoTime() - warm0) / 1e9
     if (warmPass.nonEmpty) {
       val (coldLine, _) = renderLines(warmPass, sfDir, 0, -1.0,
@@ -435,11 +409,7 @@ object Bench {
       System.out.flush()
     }
     while (wantMore()) {
-      val times = order.flatMap { name =>
-        val t0 = System.nanoTime()
-        val ok = runOnce(name)
-        if (ok) Some(name -> (System.nanoTime() - t0) / 1e9) else None
-      }.toMap
+      val times = order.flatMap(name => runOnce(name).map(name -> _)).toMap
       rounds += times
       timedSec += times.values.sum
       r += 1
@@ -483,25 +453,6 @@ object Bench {
     System.out.flush()
   }
 
-  /** (printed stdout line, BENCH_FULL.json content).
-    *
-    * `spread_pct:-1.000` means "n/a — fewer than two complete rounds";
-    * it always accompanies `dispersion_ok:false`.
-    *
-    * The harness that invokes this main captures only a bounded tail of
-    * stdout (~2 KB) and parses the JSON line out of it. With 100+
-    * queries at full double precision the line exceeds that window and
-    * the start of the JSON gets truncated away — so the printed line
-    * must stay short: 3-decimal times, slowest 30 queries inline, the
-    * rest folded into other_sec/other_n. The complete per-query map,
-    * per-round provenance and skip list go to BENCH_FULL.json on disk.
-    * BenchSpec pins the size bound.
-    *
-    * `dispersion_ok:false` means the best-3 round totals still spread
-    * > the 10% gate after 6 interleaved rounds: the environment was
-    * too noisy even against the measured host floor
-    * and this number must NOT adjudicate a regression — rerun
-    * exclusively. */
   /** Median of the per-round suite totals — the robust headline. The
     * min-based total can assemble an optimistic composite (each
     * query's best moment, possibly from different rounds); the median
@@ -550,6 +501,25 @@ object Bench {
     }
   }
 
+  /** (printed stdout line, BENCH_FULL.json content).
+    *
+    * `spread_pct:-1.000` means "n/a — fewer than two complete rounds";
+    * it always accompanies `dispersion_ok:false`.
+    *
+    * The harness that invokes this main captures only a bounded tail of
+    * stdout (~2 KB) and parses the JSON line out of it. With 100+
+    * queries at full double precision the line exceeds that window and
+    * the start of the JSON gets truncated away — so the printed line
+    * must stay short: 3-decimal times, slowest 30 queries inline, the
+    * rest folded into other_sec/other_n. The complete per-query map,
+    * per-round provenance and skip list go to BENCH_FULL.json on disk.
+    * BenchSpec pins the size bound.
+    *
+    * `dispersion_ok:false` means the best-3 round totals still spread
+    * > the 10% gate after 6 interleaved rounds: the environment was
+    * too noisy even against the measured host floor
+    * and this number must NOT adjudicate a regression — rerun
+    * exclusively. */
   def renderLines(
       results: Map[String, Double],
       sfDir: String,

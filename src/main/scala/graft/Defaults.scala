@@ -10,9 +10,10 @@ object Defaults {
       math.min(32, Runtime.getRuntime.availableProcessors).toString)
 
   /** The graft session profile — ONE definition of the SparkSession
-    * config every entrypoint (Bench/Verify/Probe/Cli) starts from, and
-    * the builder a USER session on a decade-scale corpus should start
-    * from too (ARCHITECTURE.md deployment notes):
+    * config every entrypoint (Bench/Verify/Profile/Cli/AnnRecallBench/
+    * StreamBench/SynthScale, and the test suite's session) starts
+    * from, and the builder a USER session on a decade-scale corpus
+    * should start from too (ARCHITECTURE.md deployment notes):
     *
     *   - shuffle partitions = worker threads (local mode; a cluster
     *     deployment overrides with its executor-core total);
@@ -34,7 +35,8 @@ object Defaults {
     *     a big corpus through their own session hit the same kill.
     *
     * Callers chain further config (Cli's master override, Bench's
-    * timed-round GC policy) before getOrCreate(). */
+    * timed-round GC policy, the tests' 4-thread master) before
+    * getOrCreate(). */
   def sessionBuilder(): org.apache.spark.sql.SparkSession.Builder =
     org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
@@ -47,7 +49,7 @@ object Defaults {
       // bucket-member lists) falls back to SORT-based aggregation at
       // 128 in-memory keys by default; the minhash cascade's
       // (band, bucket) aggregate has thousands of keys per task, and
-      // QProf showed every task falling back (numTasksFallBacked=32,
+      // Profile showed every task falling back (numTasksFallBacked=32,
       // 3.1 s aggTime + the sort path re-serializing signature
       // structs). 4096 keys × a bounded bucket-member buffer
       // (maxBucketSize × ~250 B ≈ 8 KB) ≈ 32 MB per task worst-case —

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus scaler for scale-drift benchmarking:
@@ -59,18 +59,7 @@ object SynthScale {
     // bound is only about id headroom under Off
     require(stride >= 1 && factor.toLong * stride <= 4096,
       s"factor*stride out of range: $factor*$stride")
-    val spark = SparkSession.builder()
-      .master(s"local[${Defaults.cpus}]")
-      .config("spark.sql.shuffle.partitions", Defaults.cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      // off by default in Spark 4.1; prunes the big side of shuffled
-      // inner/semi joins with a runtime bloom at 100 TB scale
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Defaults.sessionBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def tbl(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

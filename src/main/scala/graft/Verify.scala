@@ -3,7 +3,6 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
-import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   * Queries run concurrently (Spark schedules the jobs); each output is
@@ -17,7 +16,6 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val nameFilter: String => Boolean =
       if (args.length > 2) _.contains(args(2)) else _ => true
-    val cpus = Defaults.cpus
     // every invocation computes from the parquet inputs: drop any ANN
     // index a previous process published for this corpus
     SparkEntry.purgePersistedIndexes(sfDir)
@@ -41,22 +39,25 @@ object Verify {
     }
     Await.result(Future.sequence(futures), Duration.Inf)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSqlFor(sfDir)
       .filter(kv => nameFilter(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** `s` as a JSON string literal — the one escaper every graft JSON
+    * writer uses: backslash, quote, and ALL control chars (<0x20). A
+    * tab or CR in an oracle SQL string would otherwise make the
+    * oracle compare's `json.load` of oracle_sql.json fail; a newline
+    * in a report field would split a line-mode JSON record. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -304,7 +304,7 @@ object Warehouse {
     * check_crosswalk_drift.py:101-102). */
   def saveJsonReport(path: String, fields: Seq[(String, Any)]): Unit = {
     def quote(v: Any): String = v match {
-      case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      case s: String => graft.Verify.jsonString(s)
       case m: Map[_, _] =>
         m.map { case (k, x) => quote(k.toString) + ": " + quote(x) }.mkString("{", ", ", "}")
       case seq: Seq[_] => seq.map(quote).mkString("[", ", ", "]")

@@ -11,21 +11,17 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The production profile ([[Defaults.sessionBuilder]]) with only
+    * the size (4 threads, 4 shuffle partitions), the name and a
+    * private warehouse dir overridden — the suite runs the settings
+    * the mains and the benchmark run. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Defaults.sessionBuilder()
       .master("local[4]")
-      .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      // off by default in Spark 4.1; prunes the big side of shuffled
-      // inner/semi joins with a runtime bloom at 100 TB scale
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .appName("graft-test")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-spark-warehouse").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

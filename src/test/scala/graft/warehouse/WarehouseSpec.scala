@@ -72,11 +72,14 @@ class WarehouseSpec extends SparkSpec {
     val p = Files.createTempDirectory("graft-rep").resolve("r.json").toString
     Warehouse.saveJsonReport(p, Seq(
       "source" -> "npp", "valid" -> 10, "invalid" -> 2,
-      "errors" -> Seq("a \"quoted\" err", "b\\path"),
+      "errors" -> Seq("a \"quoted\" err", "b\\path", "line1\nline2\tcol\u0001end"),
     ))
     val df = spark.read.json(p)
+    assert(df.count() == 1)
     assert(df.select("source").head().getString(0) == "npp")
     assert(df.select("valid").head().getLong(0) == 10)
+    assert(df.select("errors").head().getSeq[String](0) ==
+      Seq("a \"quoted\" err", "b\\path", "line1\nline2\tcol\u0001end"))
   }
 
   test("bucketed tables join with no exchange on either side (co-located join)") {

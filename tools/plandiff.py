@@ -1,10 +1,13 @@
 #!/usr/bin/env python3
-"""Diff two graft.PlanDump output directories, ignoring per-run tokens.
+"""Diff two plan directories, ignoring per-run tokens.
 
 Usage: plandiff.py <dirA> <dirB>
 
-PlanDump writes one `<query>_<tag>.txt` per query, each the query's
-`explain("formatted")` text. Files are paired by query name (the tag
+`graft.Profile plans <sfDir> <outDir> <tag> [query ...]` writes one
+`<query>_<tag>.txt` per query, each the query's `explain("formatted")`
+text; the `graft.PlanDump <outDir> <tag>` main it replaced wrote the
+same files, so a dir from either can be compared with one from the
+other. Files are paired by query name (the tag
 after the last `_` may differ between the two dirs). Before comparing,
 the tokens that change from run to run of the same plan are replaced by
 placeholders:
@@ -18,13 +21,14 @@ placeholders:
   - lambda identity hashes (`Foo$$$Lambda$5812/0x00007f...@307b954`,
     `Foo$$Lambda/0x00007f...@307b954`) -> `$Lambda`
   - lambda variable names (`lambda x_49`) -> `lambda x_N`; Spark
-    numbers them from one JVM-wide counter, and two PlanDump runs of
+    numbers them from one JVM-wide counter, and two plan dumps of
     the same commit number the vector-search plans differently
   - /tmp paths (`file:/tmp/graft-i8114.../meta`) -> `/tmp/...`
 
 Prints a unified diff for every query whose normalized plans differ
-and each query present in only one dir. Exits 1 on any difference,
-0 when every plan matches.
+and each query present in only one dir. Exits 1 on any difference or
+when no query is present in both dirs (empty or misnamed dirs), 0 when
+every plan matches.
 """
 import difflib
 import os
@@ -71,8 +75,9 @@ def main(a_dir: str, b_dir: str) -> int:
         if ta != tb:
             differing += 1
             sys.stdout.writelines(difflib.unified_diff(ta, tb, a[q], b[q], n=2))
-    print(f"{len(set(a) & set(b))} queries compared, {differing} differ")
-    return 1 if differing else 0
+    compared = len(set(a) & set(b))
+    print(f"{compared} queries compared, {differing} differ")
+    return 1 if differing or compared == 0 else 0
 
 
 if __name__ == "__main__":
