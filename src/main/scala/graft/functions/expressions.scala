@@ -1265,6 +1265,261 @@ object TokenTf {
   }
 }
 
+/** A driver-built object a BM25 kernel reads on the executors: the
+  * broadcast travels in the plan as an object literal, and `label`
+  * is what `explain` prints for it. */
+final class Bm25Handle[T](val bc: org.apache.spark.broadcast.Broadcast[T], label: String)
+    extends Serializable {
+  def value: T = bc.value
+  override def toString: String = label
+}
+
+/** The query side of one BM25 call, built once on the driver
+  * ([[graft.text.Bm25]]) and broadcast to both BM25 kernels: the
+  * distinct query terms (a term's id is its index), the queries
+  * holding each term (a query's index is its position in `queryIds`),
+  * and each query id as a Catalyst value of `queryIdType`. */
+final class Bm25Queries(
+    val terms: Array[UTF8String],
+    val termQueries: Array[Array[Int]],
+    val queryIds: Array[Any],
+    val queryIdType: DataType,
+) extends Serializable {
+
+  @transient private lazy val ids: java.util.HashMap[UTF8String, Integer] = {
+    val m = new java.util.HashMap[UTF8String, Integer](terms.length * 2)
+    var i = 0
+    while (i < terms.length) { m.put(terms(i), i); i += 1 }
+    m
+  }
+
+  /** Term id of `bytes[start, end)`, or -1 when no query holds it. */
+  def termId(bytes: Array[Byte], start: Int, end: Int): Int = {
+    val id = ids.get(UTF8String.fromBytes(bytes, start, end - start))
+    if (id == null) -1 else id.intValue
+  }
+
+  // Per-thread scratch: the value is shared by every task of an
+  // executor, and each document resets only the slots it touched.
+  @transient private lazy val scratchTl: ThreadLocal[Bm25Scratch] =
+    ThreadLocal.withInitial(() => new Bm25Scratch(terms.length, queryIds.length))
+  private[functions] def scratch: Bm25Scratch = scratchTl.get()
+}
+
+private[functions] final class Bm25Scratch(nTerms: Int, nQueries: Int) {
+  val tf = new Array[Int](nTerms)
+  val touchedTerms = new Array[Int](nTerms)
+  val sum = new Array[Long](nQueries)
+  // 0 = untouched, 1 = touched with only null contributions, 2 = has a sum
+  val state = new Array[Byte](nQueries)
+  val touchedQueries = new Array[Int](nQueries)
+  // unscaled sums that left the long range, per query; rare
+  var big: Array[java.math.BigInteger] = _
+}
+
+/** Corpus statistics of one BM25 call as the scoring kernel needs
+  * them: per-term idf (NaN for a term `maxDfFraction` pruned), k1, b
+  * and avgdl. */
+final class Bm25Stats(val idf: Array[Double], val k1: Double, val b: Double, val avgdl: Double)
+    extends Serializable
+
+/** graft_bm25_postings(text, queries) → struct(dl int, t array<int>,
+  * tf array<int>): one document's token count and the term frequency
+  * of each QUERY term it holds — the same lowercase and java-`\s`
+  * split as [[Tokens]], scanned once without materializing a token,
+  * and counted only for terms in the broadcast [[Bm25Queries]], so no
+  * full-vocabulary map is built. A null text has no tokens. */
+case class Bm25Postings(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+
+  override def inputTypes = Seq(StringType, ObjectType(classOf[Bm25Handle[_]]))
+  override def dataType: DataType = Bm25Postings.Type
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_bm25_postings"
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (!right.foldable)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires the query handle as a literal")
+    else super.checkInputDataTypes()
+
+  @transient private lazy val queries: Bm25Queries =
+    right.eval().asInstanceOf[Bm25Handle[Bm25Queries]].value
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    Bm25Postings.compute(left.eval(input).asInstanceOf[UTF8String], queries)
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object Bm25Postings {
+  val Type: StructType = StructType(Seq(
+    StructField("dl", IntegerType, nullable = false),
+    StructField("t", ArrayType(IntegerType, containsNull = false), nullable = false),
+    StructField("tf", ArrayType(IntegerType, containsNull = false), nullable = false)))
+
+  /** Shared by interpreted eval and the no-Spark specs. */
+  def compute(t: UTF8String, q: Bm25Queries): org.apache.spark.sql.catalyst.InternalRow = {
+    val s = q.scratch
+    var dl = 0
+    var hits = 0
+    if (t != null) {
+      // Tokenize.tokenize's scan, without recording the token bounds
+      val bytes = t.toLowerCase.getBytes
+      val n = bytes.length
+      var i = 0
+      while (i < n) {
+        while (i < n && Tokenize.isWs(bytes(i))) i += 1
+        if (i < n) {
+          val start = i
+          while (i < n && !Tokenize.isWs(bytes(i))) i += 1
+          dl += 1
+          val id = q.termId(bytes, start, i)
+          if (id >= 0) {
+            if (s.tf(id) == 0) { s.touchedTerms(hits) = id; hits += 1 }
+            s.tf(id) += 1
+          }
+        }
+      }
+    }
+    val ids = new Array[Int](hits)
+    val tfs = new Array[Int](hits)
+    var j = 0
+    while (j < hits) {
+      val id = s.touchedTerms(j)
+      ids(j) = id
+      tfs(j) = s.tf(id)
+      s.tf(id) = 0
+      j += 1
+    }
+    org.apache.spark.sql.catalyst.InternalRow(dl,
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(ids),
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(tfs))
+  }
+}
+
+/** graft_bm25_score(postings, queries, stats) → array<struct(q, s
+  * decimal(28,12))>: one document scored against every query that
+  * shares a term with it. Each (document, term) contribution is the
+  * expression tree of the SQL form, in its IEEE operation order —
+  * idf · (tf · (k1 + 1)) / (tf + k1 · ((1 − b) + b · dl / avgdl)),
+  * with idf computed on the driver by `StrictMath.log` as Spark's
+  * `Log` does — then Spark's non-ANSI `CAST(_ AS DECIMAL(18,12))`
+  * (`Decimal(double)` rounded HALF_UP; an overflow is null and the
+  * sum skips it). The per-query sums are exact: unscaled longs with
+  * `addExact`, falling back to `BigInteger` on overflow, so they equal
+  * Spark's `sum` of the DECIMAL(18,12) terms in any order. A query
+  * whose contributions were all null sums to null; a sum beyond
+  * DECIMAL(28,12) is null, as the non-ANSI `sum` makes it. */
+case class Bm25Score(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
+
+  override def inputTypes = Seq(Bm25Postings.Type,
+    ObjectType(classOf[Bm25Handle[_]]), ObjectType(classOf[Bm25Handle[_]]))
+  override def prettyName: String = "graft_bm25_score"
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (!second.foldable || !third.foldable)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires the query and stats handles as literals")
+    else super.checkInputDataTypes()
+
+  @transient private lazy val queries: Bm25Queries =
+    second.eval().asInstanceOf[Bm25Handle[Bm25Queries]].value
+  @transient private lazy val stats: Bm25Stats =
+    third.eval().asInstanceOf[Bm25Handle[Bm25Stats]].value
+
+  // the query id type is fixed on the driver, with the handle
+  override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("q", queries.queryIdType),
+      StructField("s", DecimalType(28, 12)))),
+    containsNull = false)
+
+  override def nullSafeEval(p: Any, q: Any, s: Any): Any =
+    Bm25Score.compute(p.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow], queries, stats)
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
+}
+
+object Bm25Score {
+  /** Unscaled marker of a null DECIMAL(18,12) contribution; a real
+    * one lies within ±(10^18 − 1). */
+  val NullContribution: Long = Long.MinValue
+
+  private val MaxSum = java.math.BigInteger.TEN.pow(28)
+
+  /** Spark's non-ANSI `CAST(c AS DECIMAL(18,12))` as an unscaled long. */
+  def toDecimal12(c: Double): Long =
+    try {
+      val d = Decimal(c)
+      if (d.changePrecision(18, 12)) d.toUnscaledLong else NullContribution
+    } catch { case _: NumberFormatException => NullContribution }
+
+  /** Shared by interpreted eval and the no-Spark specs. */
+  def compute(p: org.apache.spark.sql.catalyst.InternalRow, q: Bm25Queries,
+      st: Bm25Stats): ArrayData = {
+    val ts = p.getArray(1)
+    val tfs = p.getArray(2)
+    val n = ts.numElements()
+    if (n == 0) return new GenericArrayData(Array.empty[Any])
+    val s = q.scratch
+    val dl = p.getInt(0).toDouble
+    val kp1 = st.k1 + 1.0
+    val norm = st.k1 * ((1.0 - st.b) + st.b * dl / st.avgdl)
+    var touched = 0
+    var j = 0
+    while (j < n) {
+      val t = ts.getInt(j)
+      val idf = st.idf(t)
+      if (!java.lang.Double.isNaN(idf)) {
+        val tf = tfs.getInt(j).toDouble
+        val c = toDecimal12(idf * (tf * kp1) / (tf + norm))
+        val qs = q.termQueries(t)
+        var k = 0
+        while (k < qs.length) {
+          val qi = qs(k)
+          if (s.state(qi) == 0) { s.touchedQueries(touched) = qi; touched += 1; s.state(qi) = 1 }
+          if (c != NullContribution) {
+            if (s.state(qi) == 1) { s.sum(qi) = c; s.state(qi) = 2 }
+            else if (s.big != null && s.big(qi) != null)
+              s.big(qi) = s.big(qi).add(java.math.BigInteger.valueOf(c))
+            else
+              try s.sum(qi) = Math.addExact(s.sum(qi), c)
+              catch {
+                case _: ArithmeticException =>
+                  if (s.big == null) s.big = new Array[java.math.BigInteger](s.sum.length)
+                  s.big(qi) = java.math.BigInteger.valueOf(s.sum(qi))
+                    .add(java.math.BigInteger.valueOf(c))
+              }
+          }
+          k += 1
+        }
+      }
+      j += 1
+    }
+    val out = new Array[Any](touched)
+    var w = 0
+    while (w < touched) {
+      val qi = s.touchedQueries(w)
+      val sum: Decimal =
+        if (s.state(qi) == 1) null
+        else if (s.big != null && s.big(qi) != null) {
+          val b = s.big(qi)
+          s.big(qi) = null
+          if (b.abs.compareTo(MaxSum) >= 0) null
+          else Decimal(new java.math.BigDecimal(b, 12), 28, 12)
+        } else Decimal(s.sum(qi), 28, 12)
+      out(w) = org.apache.spark.sql.catalyst.InternalRow(q.queryIds(qi), sum)
+      s.state(qi) = 0
+      w += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
 /** ngrams(text) → array<string>: DSIR's feature list — ALL unigrams
   * in order, then all adjacent bigrams in order, NON-distinct (counts
   * matter for a multinomial). ≡ ImportanceResampling.ngramsOf over
@@ -1428,6 +1683,10 @@ object GraftFunctions {
       args => TextStats(args(0))),
     desc("graft_ngrams", "non-distinct unigrams then adjacent bigrams of normalized text",
       args => Ngrams(args(0))),
+    desc("graft_bm25_postings", "per-document (length, query-term ids, tfs) against a broadcast BM25 query-term map",
+      args => Bm25Postings(args(0), args(1))),
+    desc("graft_bm25_score", "per-document (query id, decimal BM25 score) rows against broadcast query terms and corpus stats",
+      args => Bm25Score(args(0), args(1), args(2))),
     desc("graft_eval_once", "identity optimizer barrier: the child is evaluated exactly once per row",
       args => EvalBarrier(args(0))),
   )

@@ -583,22 +583,6 @@ object StreamingIngest {
       .distinct().orderBy(col("u").asc).limit(k)
   }
 
-  /** Corpus vocabulary estimate straight from the ACCUMULATED sketch
-    * state — zero corpus scans: the ingest pipeline already maintains
-    * the KMV partials batch-by-batch, so a retrieval caller gets the
-    * [[graft.text.Bm25.bm25TopK]] `corpusVocabEstimate` input for the
-    * cost of reading the (one-row-per-batch) state table. This is the
-    * production wiring of the measured t11 shape-selection rule.
-    *
-    * `k` MUST equal (or undercut) the `kmvK` the state was ingested
-    * with — the [[graft.text.Sketches.kmvEstimateFromSketch]]
-    * contract: folding per-batch partials at a LARGER k yields rows
-    * that are not corpus order statistics and a sub-k count that is
-    * not "the exact set", both biasing the estimate low. The default
-    * matches [[drainSketchState]]'s default. */
-  def vocabEstimateFromState(spark: SparkSession, statePath: String, k: Int = 256): Long =
-    graft.text.Sketches.kmvEstimateFromSketch(kmvStateSketch(spark, statePath, k), k)
-
   /** Folded HLL registers of the drained state — per-bucket max across
     * every batch partial ([[graft.text.Sketches.hllMerge]] n-way).
     * Feed to `hllDistinctFromRegisters`. */

@@ -1,8 +1,15 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ObjectLiteral
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{Bm25Handle, Bm25Queries, Bm25Stats, Tokens}
+import graft.quality.CacheScope
 
 /** Okapi BM25 sparse retrieval (Robertson & Zaragoza 2009, "The
   * Probabilistic Relevance Framework: BM25 and Beyond") — the lexical
@@ -10,76 +17,50 @@ import org.apache.spark.sql.functions._
   * score(q, d) = Σ_{t ∈ q ∩ d} idf(t) · tf·(k1+1) / (tf + k1·(1 − b +
   * b·|d|/avgdl)), idf(t) = ln((N − df + 0.5)/(df + 0.5) + 1).
   *
-  * Scale design:
-  *   - Inverted-index join: the distinct query terms (|Q| rows —
-  *     tiny) BROADCAST against the corpus's (doc, term, tf) postings;
-  *     the corpus never cross-joins the query set and only postings
-  *     whose term appears in some query survive the join.
-  *   - Corpus statistics are one aggregation each: doc lengths are a
-  *     corpus-sized hash aggregate, N and avgdl a single tiny
-  *     broadcast row, and term document-frequencies aggregate only
-  *     the QUERY-term postings (df over pruned postings equals df
-  *     over the corpus for every scorable term) — |Q| keys, not the
-  *     billions-of-terms vocabulary.
-  *   - Per-(query, doc) accumulation sums DECIMAL(18,12) term
-  *     contributions — exact and order-free under any partitioning
-  *     (the [[UnigramLM]] trick), so results are deterministic and
-  *     SQL-replayable.
-  *   - Top-k is a query-partitioned window, never a global sort.
-  */
+  * One shape, one pass over the corpus:
+  *   - The query side lives on the driver: the query rows are
+  *     collected and tokenized with the `graft_tokens` kernel
+  *     ([[Tokens]]), and the distinct (query, term) map is broadcast
+  *     once. It is bounded by [[MaxQueryTermPairs]].
+  *   - `graft_bm25_postings` runs once per document: its length and
+  *     the term frequency of each QUERY term it holds — never a
+  *     full-vocabulary map. Its output is cached for the call.
+  *   - One statistics action returns N, Σdl and every query term's df
+  *     to the driver, which computes avgdl and idf there and applies
+  *     `maxDfFraction`. df, N and avgdl are driver values, the inputs
+  *     a score-bound pruning needs.
+  *   - `graft_bm25_score` scores each document against every query
+  *     that shares a term with it, as exact DECIMAL(18,12) term sums
+  *     (order-free under any partitioning, so results are
+  *     deterministic and SQL-replayable), and a query-partitioned
+  *     `row_number` window — never a global sort — keeps the top k.
+  *
+  * Like LineDedup's gate count, the call runs two actions of its own
+  * while it builds the plan (the query collect and the statistics) and
+  * returns a lazy frame that reads the cached postings; the cache is
+  * released after the caller's action ([[CacheScope.retainAcrossOwnAction]]).
+  * With a parquet query set and the caller's collect, a call runs four
+  * Spark jobs (Bm25Spec counts them). */
 object Bm25 {
+
+  /** Bound on the distinct (query, term) pairs the driver-side query
+    * map holds (about 4 bytes each in the broadcast, plus the terms).
+    * t11 at sf10 — about 5,000 whole-document queries of some 23
+    * distinct terms each — needs about 120,000. */
+  val MaxQueryTermPairs: Int = 1 << 20
 
   /** Top-k BM25 retrieval. `queries` supplies (queryIdCol,
     * queryTextCol) rows; output is (queryIdCol, idCol, score, rank).
-    * `excludeSelf` drops the query row itself when queries are drawn
-    * from the corpus (the ANN-query convention). N and avgdl count
-    * documents with at least one token.
+    * Rows sharing a query id form one query. `excludeSelf` drops the
+    * query row itself when queries are drawn from the corpus (the
+    * ANN-query convention). N and avgdl count documents with at least
+    * one token; a document with a null id counts in N, avgdl and df
+    * but is never returned.
     *
-    * `maxDfFraction` < 1 is the hot-term scale guard: terms appearing
-    * in more than that fraction of documents are pruned from scoring
-    * entirely (classic stop-word elimination). Without it a query
-    * containing "the" joins a posting for nearly EVERY document — the
-    * one place this operator's cost degenerates from
-    * |queries ∩ postings| to |corpus|. Such terms carry idf ≈ ln(1+ε)
-    * anyway, so the ranking loss is tiny and bounded by the cap.
-    *
-    * TWO physical shapes, identical results (Bm25Spec pins them
-    * decimal-exact; the selection rule lives next to the measured
-    * negative result in PLANS.md t11):
-    *
-    *   - AGGREGATE-FIRST (default): the corpus collapses to (doc,
-    *     term, tf) postings before anything touches the query set —
-    *     map-side combine absorbs the token instances, robust to any
-    *     query-vocabulary size. This form won at sf10 against the
-    *     alternative by ~2× on a corpus-drawn query set.
-    *   - INSTANCE-PRUNED: doc lengths come narrowly from
-    *     `size(tokens)` and token INSTANCES broadcast-probe the query
-    *     terms BEFORE the (doc, term) aggregate, eliminating the
-    *     full-vocabulary shuffle. Wins only when |query vocab| ≪
-    *     |corpus vocab| (point-query retrieval against a big corpus);
-    *     on query sets whose vocabulary covers the corpus it pays a
-    *     per-instance probe for nothing (the measured 87 → 180 s sf10
-    *     regression that made aggregate-first the default).
-    *
-    * Selection: `forceInstancePruned` pins a shape; otherwise, when
-    * `corpusVocabEstimate` is supplied (the KMV/HLL distinct-token
-    * estimate from [[Sketches]] — a pipeline that maintains corpus
-    * sketches gets this number for free), the pruned shape is chosen
-    * iff |query vocab| · [[InstancePruneVocabFactor]] ≤ estimate. With
-    * neither given, aggregate-first runs with zero extra actions. */
-  val InstancePruneVocabFactor: Long = 50L
-
-  /** The measured selection rule (PLANS.md t11 — conservative by
-    * design: the sf10 negative result showed instance-pruning LOSES 2×
-    * when the query vocabulary covers the corpus): prune instances iff
-    * the query vocabulary is at least [[InstancePruneVocabFactor]]×
-    * smaller than the corpus vocabulary. Callers get the estimate from
-    * [[Sketches.kmvVocabEstimate]] (one bounded corpus pass) or, for
-    * free, from accumulated streaming sketch state
-    * ([[graft.streaming.StreamingIngest.vocabEstimateFromState]]). */
-  def selectsInstancePruned(nQueryVocab: Long, corpusVocabEstimate: Long): Boolean =
-    nQueryVocab * InstancePruneVocabFactor <= corpusVocabEstimate
-
+    * `maxDfFraction` < 1 is the hot-term guard: terms appearing in
+    * more than that fraction of documents are dropped from scoring
+    * (classic stop-word elimination). Such terms carry idf ≈ ln(1+ε)
+    * anyway, so the ranking loss is tiny and bounded by the cap. */
   def bm25TopK(
       docs: DataFrame,
       idCol: String,
@@ -92,116 +73,129 @@ object Bm25 {
       b: Double = 0.75,
       excludeSelf: Boolean = false,
       maxDfFraction: Double = 1.0,
-      corpusVocabEstimate: Option[Long] = None,
-      forceInstancePruned: Option[Boolean] = None,
   ): DataFrame = {
     require(maxDfFraction > 0.0 && maxDfFraction <= 1.0,
       s"maxDfFraction must be in (0, 1], got $maxDfFraction")
-    val qterms = queries.select(col(queryIdCol),
-        explode(TextAnalysis.normalizedTokens(col(queryTextCol))).as("_t"))
-      .distinct()
-    val pruneInstances = forceInstancePruned.getOrElse(
-      corpusVocabEstimate.exists { vocab =>
-        // query frames are small by contract — this count is the only
-        // extra action, and only when the caller opted into selection
-        val nq = qterms.select(col("_t")).distinct().count()
-        selectsInstancePruned(nq, vocab)
-      })
-    // Either shape yields the same three frames; everything downstream
-    // (df, idf, decimal scoring, top-k) is shared verbatim.
-    //   qpost: (idCol, _t, _tf) postings restricted to query terms
-    //   dl:    (idCol, _dl) token count per doc with >= 1 token
-    //   stats: one row (_n, _avgdl)
-    val (qpost, dl, stats) =
-      if (!pruneInstances) {
-        // One tokenization pass, MAP-SIDE term counting: term
-        // frequencies are a per-document statistic, so the old
-        // explode → groupBy(doc, token) idiom's full-VOCABULARY
-        // exchange (the largest shuffle of the indexing path at any
-        // scale) is not fundamental — the graft_token_tf kernel folds
-        // each document's token stream through one hash map inside
-        // the row, and doc lengths fold narrowly from the same array
-        // (Σ tf ≡ token count). Cache the per-doc arrays
-        // (vocab-per-doc-sized, i.e. sub-linear in raw text),
-        // action-scoped: the postings explode and the length fold are
-        // two consumers of one tokenization, and repeated calls in a
-        // long-lived session accumulate nothing.
-        // The repartition replaces the old shape's full-vocabulary
-        // aggregate exchange with a strictly smaller one — per-doc
-        // PACKED arrays (the id once per document, no per-(doc,term)
-        // row overhead) instead of flat (doc, term, tf) rows — and
-        // hash-partitions the postings by id, so the dl join below is
-        // exchange-free and the scoring fan-out inherits real
-        // parallelism even when the scan is a single split (small
-        // corpora are one parquet row group; at scale the scan has
-        // natural splits and this exchange is the indexing pass's
-        // only one).
-        val tfs = graft.quality.CacheScope.cachedUntilAction(
-          docs.select(col(idCol),
-            call_function("graft_token_tf", col(textCol)).as("_tfs"))
-            .repartition(col(idCol)))
-        val tf = tfs
-          .select(col(idCol), explode(col("_tfs")).as("_e"))
-          .select(col(idCol), col("_e.t").as("_t"), col("_e.tf").as("_tf"))
-        val dl = tfs
-          .select(col(idCol),
-            aggregate(col("_tfs"), lit(0L), (a, x) => a + x.getField("tf")).as("_dl"))
-          .filter(col("_dl") > 0)
-        val stats = dl.agg(count(lit(1)).as("_n"), avg(col("_dl")).as("_avgdl"))
-        // Postings pruned to query terms BEFORE any per-term
-        // statistic: df(t) over the pruned postings equals df(t) over
-        // the corpus for every term that can reach a score (identical
-        // results), and the document-frequency aggregate shrinks from
-        // |vocab| — billions of terms on a web corpus — to |query
-        // vocabulary|. Cached so the df aggregate and the scoring
-        // chain share one probe pass.
-        val qpost = graft.quality.CacheScope.cachedUntilAction(
-          tf.join(broadcast(qterms.select(col("_t")).distinct()), Seq("_t")))
-        (qpost, dl, stats)
-      } else {
-        val tokAll = docs.select(col(idCol),
-          TextAnalysis.normalizedTokens(col(textCol)).as("_ts"))
-        // narrow doc lengths: |tokens| == sum of term counts, no
-        // full-vocabulary aggregate anywhere in this shape
-        val dl = tokAll.select(col(idCol), size(col("_ts")).cast("long").as("_dl"))
-          .filter(col("_dl") > 0)
-        val stats = dl.agg(count(lit(1)).as("_n"), avg(col("_dl")).as("_avgdl"))
-        val qpost = graft.quality.CacheScope.cachedUntilAction(
-          tokAll.select(col(idCol), explode(col("_ts")).as("_t"))
-            .join(broadcast(qterms.select(col("_t")).distinct()), Seq("_t"))
-            .groupBy(col(idCol), col("_t")).agg(count(lit(1)).as("_tf")))
-        (qpost, dl, stats)
-      }
-    val dfreqAll = qpost.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
-    val dfreq =
-      if (maxDfFraction < 1.0)
-        // inner joins downstream drop the pruned terms' postings
-        dfreqAll.crossJoin(broadcast(stats))
-          .filter(col("_df") <= col("_n") * maxDfFraction)
-          .select(col("_t"), col("_df"))
-      else dfreqAll
-    val joined = qpost
-      .join(broadcast(qterms), Seq("_t"))
-      .join(dfreq, Seq("_t"))
-      .join(dl, Seq(idCol))
-      .crossJoin(broadcast(stats))
-    val filtered =
-      if (excludeSelf) joined.filter(col(queryIdCol) =!= col(idCol)) else joined
-    val contrib = filtered
-      .withColumn("_idf",
-        log((col("_n") - col("_df") + 0.5) / (col("_df") + 0.5) + 1.0))
-      .withColumn("_c",
-        (col("_idf") * (col("_tf") * (k1 + 1.0)) /
-          (col("_tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl"))))
-          .cast("decimal(18,12)"))
-    contrib
-      .groupBy(col(queryIdCol), col(idCol))
-      .agg(sum(col("_c")).as("_s"))
+    val spark = docs.sparkSession
+    val sc = spark.sparkContext
+    val qmap = described(spark, "bm25TopK: query terms") {
+      queryMap(queries.select(col(queryIdCol), col(queryTextCol).cast(StringType)).collect(),
+        queries.schema(queryIdCol).dataType)
+    }
+    val qh = new Bm25Handle(sc.broadcast(qmap),
+      s"bm25 query terms(${qmap.queryIds.length} queries, ${qmap.terms.length} terms)")
+    val (postings, owned) = CacheScope.acquire(docs.select(col(idCol),
+      call_function("graft_bm25_postings", col(textCol), ObjectLiteral(qh)).as("_p")))
+    if (owned) CacheScope.retainAcrossOwnAction(postings)
+    val (n, sumDl, df) = described(spark, "bm25TopK: corpus stats") {
+      corpusStats(postings, qmap.terms.length)
+    }
+    // Spark's avg over the long lengths: a double sum (exact below
+    // 2^53) over a double count
+    val avgdl = sumDl.toDouble / n.toDouble
+    val idf = df.map { d =>
+      if (maxDfFraction < 1.0 && !(d.toDouble <= n.toDouble * maxDfFraction)) Double.NaN
+      else StrictMath.log(((n - d).toDouble + 0.5) / (d.toDouble + 0.5) + 1.0)
+    }
+    val sh = new Bm25Handle(sc.broadcast(new Bm25Stats(idf, k1, b, avgdl)),
+      s"bm25 corpus stats(N=$n, avgdl=$avgdl)")
+    val scored = postings
+      .select(col(idCol), explode(call_function("graft_bm25_score",
+        col("_p"), ObjectLiteral(qh), ObjectLiteral(sh))).as("_e"))
+      .select(col("_e.q").as(queryIdCol), col(idCol), col("_e.s").as("_s"))
+      .filter(col(idCol).isNotNull)
+    val kept = if (excludeSelf) scored.filter(col(queryIdCol) =!= col(idCol)) else scored
+    kept
       .withColumn("score", round(col("_s").cast("double"), 6))
       .withColumn("rank",
         row_number().over(
           Window.partitionBy(col(queryIdCol)).orderBy(col("score").desc, col(idCol))))
       .filter(col("rank") <= k)
       .select(col(queryIdCol), col(idCol), col("score"), col("rank").cast("int").as("rank"))
+  }
+
+  /** The driver-side query tokenization: [[Tokens]] on the text, no
+    * tokens for a null text. */
+  private[graft] def queryTokens(text: String): Array[UTF8String] =
+    if (text == null) Array.empty
+    else {
+      val a = Tokens.compute(UTF8String.fromString(text))
+      Array.tabulate(a.numElements())(a.getUTF8String)
+    }
+
+  /** The distinct (query, term) map of collected (query id, text) rows,
+    * terms and queries numbered in first-occurrence order. Fails with
+    * a message naming [[MaxQueryTermPairs]] once the pairs exceed it. */
+  private[graft] def queryMap(rows: Array[Row], queryIdType: DataType): Bm25Queries = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(queryIdType)
+    val texts = new java.util.LinkedHashMap[Any, scala.collection.mutable.ArrayBuffer[String]]()
+    rows.foreach { r =>
+      val same = texts.computeIfAbsent(toCatalyst(r.get(0)),
+        _ => scala.collection.mutable.ArrayBuffer.empty[String])
+      same += r.getString(1)
+    }
+    val termIds = new java.util.HashMap[UTF8String, Integer]()
+    val terms = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
+    val holders = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuilder.ofInt]
+    val lastQuery = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val ids = new Array[Any](texts.size)
+    var pairs = 0L
+    var qi = 0
+    texts.forEach { (id, qtexts) =>
+      ids(qi) = id
+      qtexts.foreach(t => queryTokens(t).foreach { tok =>
+        val ti = termIds.computeIfAbsent(tok, _ => {
+          terms += tok
+          holders += new scala.collection.mutable.ArrayBuilder.ofInt
+          lastQuery += -1
+          terms.length - 1
+        }).intValue
+        if (lastQuery(ti) != qi) {
+          pairs += 1
+          if (pairs > MaxQueryTermPairs)
+            throw new IllegalArgumentException(
+              s"bm25TopK: the query set holds more than MaxQueryTermPairs = $MaxQueryTermPairs " +
+                "distinct (query, term) pairs; split it into smaller calls")
+          lastQuery(ti) = qi
+          holders(ti) += qi
+        }
+      })
+      qi += 1
+    }
+    new Bm25Queries(terms.toArray, holders.map(_.result()).toArray, ids, queryIdType)
+  }
+
+  /** The statistics action: (N, Σdl, df per term id) over the cached
+    * postings, one partial per partition merged on the driver. */
+  private def corpusStats(postings: DataFrame, nTerms: Int): (Long, Long, Array[Long]) = {
+    import postings.sparkSession.implicits._
+    val partials = postings.select(col("_p.dl"), col("_p.t")).as[(Int, Array[Int])]
+      .mapPartitions { rows =>
+        var n = 0L
+        var sumDl = 0L
+        val df = new Array[Long](nTerms)
+        rows.foreach { case (dl, ts) =>
+          if (dl > 0) {
+            n += 1
+            sumDl += dl
+            ts.foreach(t => df(t) += 1)
+          }
+        }
+        val seen = df.indices.filter(df(_) > 0).toArray
+        Iterator.single((n, sumDl, seen, seen.map(df)))
+      }
+      .collect()
+    val df = new Array[Long](nTerms)
+    partials.foreach { case (_, _, ts, counts) => ts.indices.foreach(i => df(ts(i)) += counts(i)) }
+    (partials.map(_._1).sum, partials.map(_._2).sum, df)
+  }
+
+  /** Runs `body` with `label` as the job description of the jobs it
+    * starts, then restores the caller's description. */
+  private def described[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setLocalProperty("spark.job.description", caller)
   }
 }

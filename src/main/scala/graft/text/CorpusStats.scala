@@ -5,29 +5,23 @@ import org.apache.spark.sql.functions._
 
 import graft.views.Refresh
 
-/** Persisted corpus statistics — the M2-maintained summary table that
-  * frees per-call retrieval from re-scanning the corpus for
-  * slowly-changing numbers.
+/** Persisted corpus statistics: ONE row (n_docs, avgdl,
+  * vocab_estimate, kmv_k), built like any summary view and refreshed
+  * through the M2 registry's atomic swap ([[graft.views.Refresh]] —
+  * readers never see a half-written row), read back with a one-row
+  * parquet scan.
   *
-  * [[graft.text.Bm25.bm25TopK]]'s physical-shape selection rule wants
-  * the corpus vocabulary estimate; computing it per call
-  * ([[Sketches.kmvVocabEstimate]]) costs a full corpus tokenize pass —
-  * honest as a demo of the rule, wrong at 100 TB where a retrieval
-  * call must not re-scan the corpus for a statistic that drifts on
-  * crawl cadence. The streaming path already gets it for free from
-  * accumulated state
-  * ([[graft.streaming.StreamingIngest.vocabEstimateFromState]]); this
-  * is the batch counterpart: ONE row (n_docs, avgdl, vocab_estimate,
-  * kmv_k), built like any summary view and refreshed through the M2
-  * registry's atomic swap ([[graft.views.Refresh]] — readers never see
-  * a half-written row), read back with a one-row parquet scan.
+  * It was built to feed [[graft.text.Bm25.bm25TopK]]'s physical-shape
+  * selection (the `vocab_estimate` column) without a per-call corpus
+  * pass. BM25 now has one shape and computes its own N, avgdl and df
+  * in the call, so nothing in a query reads this table; only
+  * CorpusStatsSpec does.
   *
   * Scale shape: the BUILD is a maintenance job — two map-side-combined
   * corpus aggregates (a narrow `size(tokens)` doc-length aggregate and
   * the KMV TakeOrdered, whose state is k 64-bit values) — scheduled on
   * refresh cadence like every M1 view, never on the query path. The
-  * READ path is one row; the retrieval call it feeds adds zero corpus
-  * scans beyond its own postings work.
+  * READ path is one row.
   */
 object CorpusStats {
 

@@ -216,15 +216,14 @@ object Sketches {
       .orderBy(col("u").asc).limit(k)
   }
 
-  /** Production corpus-stats helper: the KMV distinct-token estimate
-    * of `docs` as a plain Long, with NO exact-count verification pass
-    * (that is [[kmvDistinct]]'s job — it exists to be oracle-checked).
-    * One TakeOrdered over the distinct-token frame, then ≤ k decimals
-    * collected — bounded driver state by construction. This is the
-    * number [[graft.text.Bm25.bm25TopK]]'s shape-selection rule wants;
-    * a pipeline holding accumulated sketch state gets the same figure
-    * from [[kmvEstimateFromSketch]] without touching the corpus at all
-    * (see [[graft.streaming.StreamingIngest.vocabEstimateFromState]]). */
+  /** The KMV distinct-token estimate of `docs` as a plain Long, with
+    * NO exact-count verification pass (that is [[kmvDistinct]]'s job —
+    * it exists to be oracle-checked). One TakeOrdered over the
+    * distinct-token frame, then ≤ k decimals collected — bounded driver
+    * state by construction. It once fed BM25's physical-shape
+    * selection; BM25 has one shape now, and only tests call this. A
+    * pipeline holding accumulated sketch state gets the same figure
+    * from [[kmvEstimateFromSketch]] without touching the corpus. */
   def kmvVocabEstimate(docs: DataFrame, textCol: String, k: Int = 256): Long =
     kmvEstimateFromSketch(kmvSketch(docs, textCol, k), k)
 
@@ -241,14 +240,13 @@ object Sketches {
     * not corpus order statistics — both silently bias the estimate
     * low. [[kmvVocabEstimate]] builds and evaluates with one k, so it
     * cannot violate this; state readers must pass the ingest-time
-    * kmvK (see [[graft.streaming.StreamingIngest.vocabEstimateFromState]]). */
+    * kmvK (see [[graft.streaming.StreamingIngest.kmvStateSketch]]). */
   def kmvEstimateFromSketch(sketch: DataFrame, k: Int = 256): Long = {
     require(k >= 2, s"k must be >= 2, got $k")
     val us = sketch.collect().map(_.getDecimal(0).toBigInteger)
     // fail LOUDLY on the documented contract violation: more rows than
     // k means the sketch was built with a larger k (or is not a KMV
-    // sketch at all) — silently accepting it biases the estimate low,
-    // which can flip Bm25's shape selection
+    // sketch at all) — silently accepting it biases the estimate low
     require(us.length <= k,
       s"sketch has ${us.length} rows > k=$k: k must be at most the " +
         "sketch's builder k (for merged/state sketches, the smallest " +

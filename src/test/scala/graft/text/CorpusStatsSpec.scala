@@ -51,19 +51,4 @@ class CorpusStatsSpec extends SparkSpec {
     Refresh.refreshView(spark, wh, job)
     assert(CorpusStats.read(spark, wh) === stats)
   }
-
-  test("persisted estimate drives the same BM25 shape the eager estimate does") {
-    val wh = graft.Defaults.scratchDir("corpus-stats-spec2")
-    Refresh.refreshView(spark, wh, CorpusStats.viewJob(_ => docs, "text"))
-    val stats = CorpusStats.read(spark, wh)
-    val q = docs.filter(col("doc_id") % 250 === 0)
-      .select(col("doc_id").as("query_id"), substring(col("text"), 1, 40).as("qtext"))
-    val persisted = Bm25.bm25TopK(docs, "doc_id", "text", q, "query_id", "qtext",
-      k = 5, corpusVocabEstimate = Some(stats.vocabEstimate))
-      .orderBy("query_id", "rank").collect().toSeq
-    val eager = Bm25.bm25TopK(docs, "doc_id", "text", q, "query_id", "qtext",
-      k = 5, corpusVocabEstimate = Some(Sketches.kmvVocabEstimate(docs, "text")))
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(persisted === eager)
-  }
 }

@@ -134,6 +134,26 @@ class SketchesSpec extends SparkSpec {
     assert(merged.toSeq == whole.toSeq)
   }
 
+  test("kmvVocabEstimate equals the engine-side KMV estimate, near the true vocabulary") {
+    // 300 docs × 8 unique tokens each → true vocab 2400; the KMV
+    // estimate (k=256, rel err ~1/√k ≈ 6%) must land near it.
+    import org.apache.spark.sql.functions._
+    val big = spark.range(300).select(col("id").as("doc_id"),
+      concat_ws(" ", (0 until 8).map(j =>
+        concat(lit("tok"), (col("id") * 8 + j).cast("string"))): _*).as("text"))
+    val est = Sketches.kmvVocabEstimate(big, "text")
+    // the driver-side formula must agree EXACTLY with the engine-side
+    // oracle-checked computation (t17's est_distinct column)
+    val engineSide = Sketches.kmvDistinct(big, "text", k = 256)
+      .collect().head.getLong(2)
+    assert(est === engineSide)
+    assert(est > 1200 && est < 4800, s"KMV estimate far off true vocab 2400: $est")
+    // a corpus smaller than k is estimated EXACTLY (sketch = the set)
+    val small = Seq((1L, "apple banana apple"), (2L, "banana cherry"), (3L, "cherry date cherry date"))
+      .toDF("doc_id", "text")
+    assert(Sketches.kmvVocabEstimate(small, "text") === 4L)
+  }
+
   test("kmvDistinct: above k the estimate lands near the truth") {
     // 1000 distinct synthetic tokens, k=256: KMV's relative error
     // concentrates around 1/sqrt(k-1) ≈ 6.3%; assert a loose 25% band

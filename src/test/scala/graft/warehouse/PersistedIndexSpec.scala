@@ -1,9 +1,6 @@
 package graft.warehouse
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -47,30 +44,7 @@ class PersistedIndexSpec extends SparkSpec {
   private def ensureBuckets(wh: String, base: DataFrame): BucketIndex.Handle =
     BucketIndex.ensure(spark, wh, "t", base, "doc_id", "text", 1, 30, 6)
 
-  /** Jobs `body` starts on this thread: its jobs carry a job group, and
-    * a sentinel job in a second group marks the end of its events. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"pindex-${java.util.UUID.randomUUID()}"
-    val seen = new ConcurrentLinkedQueue[Int]()
-    val ended = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (g == group) seen.add(e.jobId)
-          if (g == s"$group-end") ended.countDown()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "sentinel")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      assert(ended.await(60, TimeUnit.SECONDS), "sentinel job never reached the listener")
-      seen.size
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf(body: => Unit): Int = jobStarts(body).size
 
   test("BucketIndex rebuilds a parquet base rewritten with the same row count") {
     val (wh, path) = (tmpDir("wh"), tmpDir("docs") + "/docs")
